@@ -28,44 +28,22 @@ class EngineConfig:
     rare_block: int = 1000
     rare_pctile: float = 20.0
     batch_size: int = 32
-    # 'window' = pure DataFrame/window-function classification (JVM, default);
-    # 'fold'   = repartition+sortWithinPartitions+mapInPandas ordered merge
-    #            (north-star scale shape; byte-identical results).
-    asof_strategy: str = "window"
     # 'exact' = reference-faithful (quirk Q5): Arrow-streaming per-source
-    #           kernel, zero-copy flat tokens (rare_bin_aggregates_stream);
-    # 'dist'  = reference-faithful, fully JVM-distributed (occurrence
-    #           windows + relational thresholds) for sources whose token
-    #           stream exceeds one worker's memory;
-    # 'fold'  = reference-faithful, one Python fold per source (the
-    #           reference's process model; bit-identical cross-check);
+    #           kernel, zero-copy flat tokens (operators/rare.rare_events_stream);
     # 'block' = salted shards + re-merge (thresholds frozen per shard —
-    #           documented relaxation; fully parallel on a hot source);
-    # 'auto'  = 'exact' while every source fits comfortably in one task,
-    #           'block' once the hottest source crosses rare_auto_rows
-    #           (AQE-style plan decision off the tiny per-source stats
-    #           aggregate the pipeline computes anyway). NOTE: the
-    #           escalation CHANGES SEMANTICS (block freezes thresholds per
-    #           shard — values may diverge from the reference) and is
-    #           data-size-dependent; operators/rare.resolve_rare_mode logs
-    #           a WARNING whenever it fires. Pin rare_mode='exact' or
-    #           'dist' for guaranteed reference-exact numbers at any size;
+    #           documented relaxation; fully parallel on a hot source;
+    #           operators/rare.rare_events_block);
     # 'off'   = rare family pinned to 0 (drops the only sequentially-
     #           constrained features).
-    rare_mode: str = "auto"
-    # 'auto' switchover: rows in the HOTTEST single source above which the
-    # per-source-sequential exact kernel becomes the job straggler / memory
-    # risk (5M paths x ~8 unique tokens x 8B ~= 300MB task state)
-    rare_auto_rows: int = 5_000_000
+    # Any other value is rejected with ValueError when the plan is built.
+    rare_mode: str = "exact"
     # attrs_sig keys with this prefix model BGP attribute types the reference
     # does not know how to compare: is_equal returns None -> "different"
     # (quirk Q6, bgpmetrics_as.py:677-722).
     unknown_attr_prefix: str = "_unk"
-    # shuffle parallelism for the entity repartition in the fold strategy
-    num_partitions: int | None = None
     # 'block' rare mode: paths-per-shard for the salted hot-source split
     # (thresholds freeze at shard boundaries; shards process in parallel
-    # and partials re-merge — operators/rare.rare_bin_aggregates_block)
+    # and partials re-merge — operators/rare.rare_events_block)
     rare_shard_paths: int = 50_000
 
     @property

@@ -198,7 +198,7 @@ def _main_aggs(cfg: EngineConfig) -> list:
         F.coalesce(F.avg("edit_dist"), F.lit(0.0)).alias("edit_distance_avg"),
         # rare family (Q5, bgpmetrics_as.py:614-628) is aggregated separately
         # on a slim projection and broadcast-joined back — see
-        # operators/rare.rare_bin_aggregates / join_rare
+        # operators/rare.rare_per_bin / join_rare
     ]
     # A8 edit-distance histogram, keys clamped < pivot_limit (Q8 export rule)
     for k in range(cfg.pivot_limit):

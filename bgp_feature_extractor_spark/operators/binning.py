@@ -12,7 +12,7 @@ no shuffle on the fact table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bgp_feature_extractor_spark.config import EngineConfig
@@ -23,12 +23,21 @@ def first_ts_per_source(events: DataFrame) -> DataFrame:
     under the reference's chronological file order). Also carries max ts so
     the dense spine can be derived WITHOUT re-executing the fact pipeline
     (bin is monotone in ts, so max_bin = (max_ts - first_ts) // bin_size),
-    and the per-source row count used by the rare-mode auto-selector."""
+    and the per-source row count that LPT-packs the exact rare kernel
+    (operators/packing.py)."""
     return events.groupBy("source").agg(
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
         F.count(F.lit(1)).alias("n_rows"),
     )
+
+
+def _bin_size(df: DataFrame, cfg: EngineConfig) -> Column:
+    """Bin width in seconds: the rows' own ``minutes_window`` when they carry
+    one (the width-as-data plan's rows, one per width), else ``cfg``'s."""
+    if "minutes_window" in df.columns:
+        return (F.col("minutes_window") * F.lit(60)).cast("long")
+    return F.lit(cfg.bin_size)
 
 
 def with_bin(
@@ -40,48 +49,51 @@ def with_bin(
         # otherwise produce a duplicate, ambiguous 'bin' column)
         df = df.drop("bin")
     if "first_ts" in df.columns:
-        # anchor already carried on the rows (multi-width plans join it once
-        # before persisting the shared frame) — binning is a pure projection,
-        # no join per width (guide §2.4: remove shuffles/joins outright)
+        # anchor already carried on the rows (the feature-matrix plan joins
+        # it once, before any persist) — binning is a pure projection, no
+        # join per width (guide §2.4: remove shuffles/joins outright)
         joined = df
     else:
         joined = df.join(F.broadcast(firsts.select("source", "first_ts")), "source")
     return joined.select(
         *[c for c in joined.columns if c != "first_ts"],
-        ((F.col("ts") - F.col("first_ts")) / F.lit(cfg.bin_size))
-        .cast("long")
-        .alias("bin"),
+        ((F.col("ts") - F.col("first_ts")) / _bin_size(joined, cfg)).cast("long").alias("bin"),
     )
 
 
-def dense_spine(per_bin: DataFrame, firsts: DataFrame, cfg: EngineConfig | None = None) -> DataFrame:
+def dense_spine(
+    per_bin: DataFrame,
+    firsts: DataFrame,
+    cfg: EngineConfig | None = None,
+    keys: tuple[str, ...] = ("source", "bin"),
+) -> DataFrame:
     """Left-join the aggregated matrix onto the full 0..max_bin spine and
     zero-fill, then reconstruct timestamps (bgpmetrics_as.py:771-772).
 
     The spine comes from the tiny per-source (first_ts, last_ts) aggregate,
     NOT from per_bin — deriving max(bin) from per_bin would re-execute the
     whole classify/rare/UDF/agg pipeline a second time (verified via
-    .explain: 28 exchanges before, half after)."""
+    .explain: 28 exchanges before, half after). When ``firsts`` carries a
+    ``minutes_window`` column (one row per width and source), each row's
+    spine is cut at that width and ``keys`` must include it."""
     cfg = cfg or EngineConfig()
+    bsz = _bin_size(firsts, cfg)
     # first_ts rides ON the spine rows (the spine IS derived from firsts),
     # so the timestamp reconstruction at the tail needs no second broadcast
     # join back to firsts — one join per width instead of two (guide §2.4)
     spine = firsts.select(
-        "source",
+        *[k for k in keys if k != "bin"],
         "first_ts",
         F.explode(
-            F.sequence(
-                F.lit(0),
-                ((F.col("last_ts") - F.col("first_ts")) / F.lit(cfg.bin_size)).cast("long"),
-            )
+            F.sequence(F.lit(0), ((F.col("last_ts") - F.col("first_ts")) / bsz).cast("long"))
         ).alias("bin"),
     )
     float_cols = {"edit_distance_avg", "rare_ases_avg"}
-    value_cols = [c for c in per_bin.columns if c not in ("source", "bin")]
-    out = spine.join(per_bin, ["source", "bin"], "left")
+    value_cols = [c for c in per_bin.columns if c not in keys]
+    out = spine.join(per_bin, list(keys), "left")
     out = out.na.fill(0, [c for c in value_cols if c not in float_cols])
     out = out.na.fill(0.0, list(float_cols & set(value_cols)))
-    ts2 = F.col("first_ts") + F.col("bin") * F.lit(cfg.bin_size)
+    ts2 = F.col("first_ts") + F.col("bin") * bsz
     out = out.drop("timestamp2", "timestamp")  # replace, never duplicate
     return out.select(
         *[c for c in out.columns if c != "first_ts"],

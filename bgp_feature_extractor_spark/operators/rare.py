@@ -4,24 +4,26 @@ Reference semantics are sequential-global per run: a frequency table over
 all tokens seen so far, a threshold re-percentiled (P20) every 1000 paths,
 post-increment rarity compare, and a 1000-path warm-up gate.
 
-Engine modes (all reference-exact, asserted equal in tests):
-  * 'exact' (default) — :func:`rare_bin_aggregates_stream`: one hash
-    shuffle by source + ``mapInArrow`` streaming kernel with zero-copy
-    flat-token access. The numpy kernel decomposes the recurrence into
+Every kernel emits PER-EVENT values — one row per gated announcement
+``(source, ts, seq, *carry, rare)`` — because the recurrence depends only
+on each source's path order, never on the bin width. One ``groupBy``
+(:func:`rare_per_bin`) turns them into the per-bin number/max/avg columns,
+at one width or at many (plans/feature_matrix.multi_width_matrices).
+
+Engine modes (``EngineConfig.rare_mode``):
+  * 'exact' (default) — :func:`rare_events_stream`: one hash shuffle by
+    source + ``mapInArrow`` streaming kernel with zero-copy flat-token
+    access. The numpy kernel decomposes the recurrence into
       (a) per-element occurrence index (stable argsort + run-relative
           arange == post-increment frequency of that token at that moment),
       (b) per-block frequency tables (bincount cumsum at block boundaries)
           -> exact P20 thresholds (np.partition order statistics),
       (c) rare_i = count of path tokens with occurrence < threshold(block).
-    A 40%-hot source costs ~the raw kernel (seconds), and the stage
-    overlaps the independent classify/agg branch of the job DAG.
-  * 'dist' — :func:`rare_bin_aggregates_dist`: fully JVM-distributed
-    (row_number windows + relational threshold fold over the tiny
-    (tok, level) pre-aggregate); higher constant factors, but no
-    single-task buffering — for sources larger than one worker's memory.
-  * 'fold' — :func:`rare_bin_aggregates`: applyInPandas per source (the
-    reference's per-peer process model); smallest code path, used as the
-    cross-check oracle.
+    Bit-identical to the dict-loop transliteration :func:`rare_counts_loop`.
+  * 'block' — :func:`rare_events_block`: salted shards + re-merge, fully
+    parallel on a hot source; thresholds freeze per shard (a documented
+    relaxation, contract oracle :func:`rare_counts_block_loop`).
+  * 'off' — the rare family is pinned to 0.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bgp_feature_extractor_spark.config import EngineConfig
@@ -170,123 +173,82 @@ def rare_counts_loop(
     return rare_ct, gated
 
 
-RARE_BIN_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType()),
-        T.StructField("bin", T.LongType()),
-        T.StructField("number_rare_ases", T.LongType()),
-        T.StructField("rare_ases_max", T.LongType()),
-        T.StructField("rare_ases_avg", T.DoubleType()),
-    ]
-)
+RARE_MODES = ("exact", "block", "off")
 
 
-def _rare_bin_kernel(cfg: EngineConfig):
-    block, pct = cfg.rare_block, cfg.rare_pctile
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "seq"], kind="stable").reset_index(drop=True)
-        toks = pdf["utokens"].to_numpy(dtype=object)
-        n = len(toks)
-        # tokens arrive already unique (array_distinct JVM-side); one C-level
-        # concatenate instead of n per-row np.unique calls
-        lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=n)
-        flat = np.concatenate(list(toks)) if lens.sum() else np.zeros(0, dtype=np.int64)
-        rare, gated = rare_counts_from_flat(flat, lens, block, pct)
-        out = pd.DataFrame(
-            {"bin": pdf["bin"].to_numpy()[gated], "rare": rare[gated].astype(np.int64)}
-        )
-        if not len(out):
-            return pd.DataFrame(
-                columns=["source", "bin", "number_rare_ases", "rare_ases_max", "rare_ases_avg"]
-            ).astype(
-                {
-                    "source": str,
-                    "bin": np.int64,
-                    "number_rare_ases": np.int64,
-                    "rare_ases_max": np.int64,
-                    "rare_ases_avg": np.float64,
-                }
-            )
-        g = out.groupby("bin")["rare"]
-        agg = pd.DataFrame(
-            {
-                "number_rare_ases": g.sum(),
-                "rare_ases_max": g.max(),
-                "rare_ases_avg": g.mean(),
-            }
-        ).reset_index()
-        agg.insert(0, "source", pdf["source"].iloc[0])
-        return agg
-
-    return kernel
+def resolve_rare_mode(cfg: EngineConfig, sizes: list[tuple[str, int]] | None = None) -> str:
+    """Validate ``cfg.rare_mode`` and return it. ``sizes`` (per-source row
+    counts) is accepted for callers that pass the stats rows along; the mode
+    never depends on the input's size."""
+    if cfg.rare_mode not in RARE_MODES:
+        raise ValueError(f"unknown rare_mode {cfg.rare_mode!r}; expected one of {RARE_MODES}")
+    return cfg.rare_mode
 
 
-def rare_bin_aggregates(
-    classified_binned: DataFrame, cfg: EngineConfig | None = None
-) -> DataFrame:
-    """Per-(source, bin) rare-token aggregates (number/max/avg, gated).
-
-    Performance shape: only a SLIM projection (source, bin, ts, seq, tokens)
-    of announcement rows is shuffled to the per-source Python worker, and
-    the kernel returns per-bin aggregates (tiny) rather than tagging every
-    event — the full-width rows never round-trip through Arrow. A hot
-    source still serializes its own path stream (reference semantics, Q5);
-    everything else in the job keeps scaling.
-
-    rare_ases_avg == number/count because the reference's per-bin mean is
-    over the same gated values it sums (bgpmetrics_as.py:615-628).
-
-    Feed this the RAW binned event stream, not the classified one: rare
-    stats depend only on (source, order, tokens) — wiring it to the
-    classifier output would re-execute the whole classify window as a
-    second DAG branch (verified via profiling: ~2x classify cost). The
-    snapshot must NOT be included (the reference's RIB init never calls
-    classify_as_path, bgpmetrics_as.py:310-334)."""
-    cfg = cfg or EngineConfig()
-    from pyspark.sql import functions as F
-
-    slim = classified_binned.filter(
-        (F.col("kind") == "ann") & F.col("tokens").isNotNull()
-    ).select(
-        "source",
-        "bin",
-        "ts",
-        "seq",
-        F.array_distinct("tokens").alias("utokens"),
+def _announced_paths(events: DataFrame, cols: list[str]) -> DataFrame:
+    """The kernels' input: announcements with tokens, as (source, *cols,
+    utokens). The snapshot is never part of it (the reference's RIB init
+    never calls classify_as_path, bgpmetrics_as.py:310-334)."""
+    return events.filter((F.col("kind") == "ann") & F.col("tokens").isNotNull()).select(
+        "source", *cols, F.array_distinct("tokens").alias("utokens")
     )
-    return slim.groupBy("source").applyInPandas(_rare_bin_kernel(cfg), RARE_BIN_SCHEMA)
 
 
-def rare_bin_aggregates_stream(
-    classified_binned: DataFrame,
+def _event_schemas(cols: list[str]):
+    """(arrow, spark) schemas of the per-event output (source, *cols, rare)."""
+    import pyarrow as pa
+
+    names = [*cols, "rare"]
+    arrow = pa.schema([("source", pa.string()), *[(c, pa.int64()) for c in names]])
+    spark = T.StructType(
+        [T.StructField("source", T.StringType())]
+        + [T.StructField(c, T.LongType()) for c in names]
+    )
+    return arrow, spark
+
+
+def _event_batch(source, vals: dict, rare: np.ndarray, gated: np.ndarray, schema):
+    """One Arrow batch of the gated rows of one source (None if none)."""
+    import pyarrow as pa
+
+    k = int(gated.sum())
+    if not k:
+        return None
+    return pa.record_batch(
+        [pa.array([source] * k, pa.string())]
+        + [pa.array(v[gated], pa.int64()) for v in vals.values()]
+        + [pa.array(rare[gated].astype(np.int64), pa.int64())],
+        schema=schema,
+    )
+
+
+def rare_events_stream(
+    events: DataFrame,
     cfg: EngineConfig | None = None,
     sizes: list[tuple[str, int]] | None = None,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Arrow-streaming rare aggregates — default 'exact' physical plan.
+    """Per-event rare counts, reference-exact — the 'exact' mode kernel.
 
-    Shape: ONE hash shuffle by source + JVM sort within partitions, then a
+    Shape: ONE shuffle by source + JVM sort within partitions, then a
     ``mapInArrow`` pass that walks each partition's (source-contiguous,
     ts-ordered) batches. Flat token access is zero-copy: the Arrow
     ListArray's values buffer IS the concatenated token stream, so the hot
-    source costs ~the raw numpy kernel (~2s at 800k paths) instead of the
-    ~18s applyInPandas fold (pandas object-array conversion + per-row
-    concatenate). Bit-identical to rare_bin_aggregates / _dist (tested).
+    source costs ~the raw numpy kernel (~2s at 800k paths).
+
+    Output: ``(source, ts, seq, *carry, rare)`` per gated announcement;
+    ``carry`` names extra long columns passed through (e.g. ``bin``).
 
     Memory note: the kernel buffers one source's unique-token stream
     (8 bytes/token); a source whose stream exceeds executor memory should
     use rare_mode='block' (frozen thresholds, shardable) — the exact
     semantics (Q5) are inherently a per-source sequential recurrence."""
     cfg = cfg or EngineConfig()
-    import pyarrow as pa
     import pyarrow.compute as pc
-    from pyspark.sql import functions as F
 
     block, pct = cfg.rare_block, cfg.rare_pctile
-
-    slim = classified_binned.filter(
-        (F.col("kind") == "ann") & F.col("tokens").isNotNull()
-    ).select("source", "bin", "ts", "seq", F.array_distinct("tokens").alias("utokens"))
+    cols = ["ts", "seq", *carry]
+    slim = _announced_paths(events, cols)
     # NOT a plain hash repartition: with n_sources ~ the shuffle partition
     # count, hash placement collides (birthday bound — 20 sources into 32
     # buckets collide with p>0.99), and a 2-source task is a 2x straggler
@@ -304,49 +266,29 @@ def rare_bin_aggregates_stream(
     else:
         part = slim.repartitionByRange("source")
     part = part.sortWithinPartitions("source", "ts", "seq")
-
-    out_schema = pa.schema(
-        [
-            ("source", pa.string()),
-            ("bin", pa.int64()),
-            ("number_rare_ases", pa.int64()),
-            ("rare_ases_max", pa.int64()),
-            ("rare_ases_avg", pa.float64()),
-        ]
-    )
+    arrow_schema, spark_schema = _event_schemas(cols)
 
     def gen(batches):
         cur = None
         flats: list[np.ndarray] = []
         lens: list[np.ndarray] = []
-        bins: list[np.ndarray] = []
+        vals: dict[str, list[np.ndarray]] = {c: [] for c in cols}
 
         def flush():
-            if cur is None:
+            if cur is None or not lens:
                 return None
-            flat = np.concatenate(flats) if flats else np.zeros(0, dtype=np.int64)
-            ln = np.concatenate(lens) if lens else np.zeros(0, dtype=np.int64)
-            bn = np.concatenate(bins) if bins else np.zeros(0, dtype=np.int64)
-            rare, gated = rare_counts_from_flat(flat, ln, block, pct)
-            if not gated.any():
-                return None
-            g = pd.DataFrame({"bin": bn[gated], "rare": rare[gated].astype(np.int64)})
-            agg = g.groupby("bin")["rare"].agg(["sum", "max", "mean"]).reset_index()
-            return pa.record_batch(
-                [
-                    pa.array([cur] * len(agg), pa.string()),
-                    pa.array(agg["bin"], pa.int64()),
-                    pa.array(agg["sum"], pa.int64()),
-                    pa.array(agg["max"], pa.int64()),
-                    pa.array(agg["mean"], pa.float64()),
-                ],
-                schema=out_schema,
+            rare, gated = rare_counts_from_flat(
+                np.concatenate(flats), np.concatenate(lens), block, pct
+            )
+            return _event_batch(
+                cur, {c: np.concatenate(v) for c, v in vals.items()}, rare, gated, arrow_schema
             )
 
         for b in batches:
-            src = b.column(0).to_numpy(zero_copy_only=False)
-            bn = b.column(1).to_numpy(zero_copy_only=False)
-            toks = b.column(4)
+            nm = b.schema.names
+            src = b.column(nm.index("source")).to_numpy(zero_copy_only=False)
+            cvals = {c: b.column(nm.index(c)).to_numpy(zero_copy_only=False) for c in cols}
+            toks = b.column(nm.index("utokens"))
             n = len(src)
             if n == 0:
                 continue
@@ -359,222 +301,48 @@ def rare_bin_aggregates_stream(
                     if rb is not None:
                         yield rb
                     cur = src[i]
-                    flats, lens, bins = [], [], []
+                    flats, lens = [], []
+                    vals = {c: [] for c in cols}
                 run = toks.slice(i, j - i)
                 flats.append(run.flatten().to_numpy(zero_copy_only=False))
                 lens.append(pc.list_value_length(run).to_numpy(zero_copy_only=False).astype(np.int64))
-                bins.append(bn[i:j])
+                for c in cols:
+                    vals[c].append(cvals[c][i:j].astype(np.int64))
         rb = flush()
         if rb is not None:
             yield rb
 
-    return part.mapInArrow(gen, RARE_BIN_SCHEMA)
+    return part.mapInArrow(gen, spark_schema)
 
 
-RARE_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("rare", T.LongType()),
-    ]
-)
-
-
-def rare_events_stream(
-    events: DataFrame,
-    cfg: EngineConfig | None = None,
-    sizes: list[tuple[str, int]] | None = None,
-) -> DataFrame:
-    """Per-EVENT rare counts — the width-independent core of quirk Q5.
-
-    The Q5 recurrence (frequency table + P20 threshold re-percentiled every
-    ``rare_block`` paths + warm-up gate, bgpmetrics_as.py:601-628) depends
-    only on each source's announcement stream in (ts, seq) order — never on
-    the bin width. This variant of :func:`rare_bin_aggregates_stream` runs
-    the identical kernel but emits one row per GATED announcement
-    ``(source, ts, seq, rare)`` instead of per-bin aggregates, so a
-    multi-width plan (plans/feature_matrix.multi_width_matrices) executes
-    the sequential recurrence ONCE and re-bins the per-event values per
-    width with a cheap groupBy (see :func:`rare_bins_from_events`).
-
-    Input: raw events with (source, ts, seq, kind, tokens) — no bin needed.
-    """
-    cfg = cfg or EngineConfig()
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql import functions as F
-
-    block, pct = cfg.rare_block, cfg.rare_pctile
-
-    slim = events.filter(
-        (F.col("kind") == "ann") & F.col("tokens").isNotNull()
-    ).select("source", "ts", "seq", F.array_distinct("tokens").alias("utokens"))
-    if sizes:
-        from bgp_feature_extractor_spark.operators.packing import repartition_packed
-
-        part = repartition_packed(slim, "source", sizes)
-    else:
-        part = slim.repartitionByRange("source")
-    part = part.sortWithinPartitions("source", "ts", "seq")
-
-    out_schema = pa.schema(
-        [
-            ("source", pa.string()),
-            ("ts", pa.int64()),
-            ("seq", pa.int64()),
-            ("rare", pa.int64()),
-        ]
+def rare_per_bin(rare_events: DataFrame, keys: tuple[str, ...] = ("source", "bin")) -> DataFrame:
+    """Per-event rare counts -> per-bin ``number_rare_ases`` (sum),
+    ``rare_ases_max`` and ``rare_ases_avg`` (mean over the same gated
+    values, bgpmetrics_as.py:615-628). ``rare_events`` must carry ``keys``."""
+    return rare_events.groupBy(*keys).agg(
+        F.sum("rare").alias("number_rare_ases"),
+        F.max("rare").alias("rare_ases_max"),
+        F.avg("rare").alias("rare_ases_avg"),
     )
-
-    def gen(batches):
-        cur = None
-        flats: list[np.ndarray] = []
-        lens: list[np.ndarray] = []
-        tss: list[np.ndarray] = []
-        seqs: list[np.ndarray] = []
-
-        def flush():
-            if cur is None:
-                return None
-            flat = np.concatenate(flats) if flats else np.zeros(0, dtype=np.int64)
-            ln = np.concatenate(lens) if lens else np.zeros(0, dtype=np.int64)
-            ts = np.concatenate(tss) if tss else np.zeros(0, dtype=np.int64)
-            sq = np.concatenate(seqs) if seqs else np.zeros(0, dtype=np.int64)
-            rare, gated = rare_counts_from_flat(flat, ln, block, pct)
-            if not gated.any():
-                return None
-            return pa.record_batch(
-                [
-                    pa.array([cur] * int(gated.sum()), pa.string()),
-                    pa.array(ts[gated], pa.int64()),
-                    pa.array(sq[gated], pa.int64()),
-                    pa.array(rare[gated].astype(np.int64), pa.int64()),
-                ],
-                schema=out_schema,
-            )
-
-        for b in batches:
-            src = b.column(0).to_numpy(zero_copy_only=False)
-            ts = b.column(1).to_numpy(zero_copy_only=False)
-            sq = b.column(2).to_numpy(zero_copy_only=False)
-            toks = b.column(3)
-            n = len(src)
-            if n == 0:
-                continue
-            starts = np.flatnonzero(np.concatenate(([True], src[1:] != src[:-1])))
-            ends = np.concatenate((starts[1:], [n]))
-            for i, j in zip(starts, ends):
-                if src[i] != cur:
-                    rb = flush()
-                    if rb is not None:
-                        yield rb
-                    cur = src[i]
-                    flats, lens, tss, seqs = [], [], [], []
-                run = toks.slice(i, j - i)
-                flats.append(run.flatten().to_numpy(zero_copy_only=False))
-                lens.append(pc.list_value_length(run).to_numpy(zero_copy_only=False).astype(np.int64))
-                tss.append(ts[i:j].astype(np.int64))
-                seqs.append(sq[i:j].astype(np.int64))
-        rb = flush()
-        if rb is not None:
-            yield rb
-
-    return part.mapInArrow(gen, RARE_EVENT_SCHEMA)
 
 
 def rare_bins_from_events(
     rare_events: DataFrame, firsts: DataFrame, cfg: EngineConfig | None = None
 ) -> DataFrame:
-    """Re-bin per-event rare counts for one width: broadcast the per-source
-    first_ts, derive ``bin = (ts - first_ts) // bin_size``, and aggregate
-    sum/max/avg — byte-identical to the per-bin kernels' output (the kernel
-    aggregates the same per-event values the same way)."""
-    cfg = cfg or EngineConfig()
-    from pyspark.sql import functions as F
-
+    """Re-bin per-event rare counts at ``cfg``'s width: bin by the
+    per-source first_ts, then :func:`rare_per_bin`."""
     from bgp_feature_extractor_spark.operators.binning import with_bin
 
-    return (
-        with_bin(rare_events, firsts, cfg)
-        .groupBy("source", "bin")
-        .agg(
-            F.sum("rare").alias("number_rare_ases"),
-            F.max("rare").alias("rare_ases_max"),
-            F.avg("rare").alias("rare_ases_avg"),
-        )
-    )
+    return rare_per_bin(with_bin(rare_events, firsts, cfg))
 
 
-def _rare_event_kernel(cfg: EngineConfig):
-    block, pct = cfg.rare_block, cfg.rare_pctile
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "seq"], kind="stable").reset_index(drop=True)
-        toks = pdf["utokens"].to_numpy(dtype=object)
-        n = len(toks)
-        lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=n)
-        flat = np.concatenate(list(toks)) if lens.sum() else np.zeros(0, dtype=np.int64)
-        rare, gated = rare_counts_from_flat(flat, lens, block, pct)
-        out = pd.DataFrame(
-            {
-                "source": pdf["source"].to_numpy()[gated],
-                "ts": pdf["ts"].to_numpy()[gated],
-                "seq": pdf["seq"].to_numpy()[gated],
-                "rare": rare[gated].astype(np.int64),
-            }
-        )
-        return out.astype(
-            {"source": str, "ts": np.int64, "seq": np.int64, "rare": np.int64}
-        )
-
-    return kernel
-
-
-def rare_events_fold(events: DataFrame, cfg: EngineConfig | None = None) -> DataFrame:
-    """Per-EVENT rare counts via the per-source Python fold (the reference's
-    process model; bit-identical to 'exact'): one row per gated announcement
-    ``(source, ts, seq, rare)`` — re-bin per width with
-    :func:`rare_bins_from_events`."""
-    cfg = cfg or EngineConfig()
-    from pyspark.sql import functions as F
-
-    slim = events.filter(
-        (F.col("kind") == "ann") & F.col("tokens").isNotNull()
-    ).select("source", "ts", "seq", F.array_distinct("tokens").alias("utokens"))
-    return slim.groupBy("source").applyInPandas(
-        _rare_event_kernel(cfg), RARE_EVENT_SCHEMA
-    )
-
-
-def resolve_rare_mode(cfg: EngineConfig, sizes: list[tuple[str, int]]) -> str:
-    """Resolve 'auto' to a concrete mode from the per-source row counts.
-
-    'auto' picks 'exact' (reference-faithful sequential kernel) while every
-    source fits one task, and escalates to 'block' — the documented
-    RELAXATION whose thresholds freeze per ``rare_shard_paths`` shard, so
-    values can diverge from the reference — once the hottest source crosses
-    ``cfg.rare_auto_rows``. Because that switch is data-size-dependent, it
-    is LOGGED at WARNING level so the same pipeline never silently changes
-    semantics between runs of different sizes (ADVICE r2)."""
-    if cfg.rare_mode != "auto":
-        return cfg.rare_mode
-    hottest = max((n for _, n in sizes), default=0)
-    if hottest <= cfg.rare_auto_rows:
-        return "exact"
-    import logging
-
-    logging.getLogger("bgp_feature_extractor_spark").warning(
-        "rare_mode='auto': hottest source has %d rows > rare_auto_rows=%d; "
-        "escalating to 'block' (thresholds frozen per %d-path shard — a "
-        "documented relaxation; values may diverge from the reference's "
-        "sequential recurrence). Set rare_mode='exact' or 'dist' to force "
-        "reference-exact semantics.",
-        hottest,
-        cfg.rare_auto_rows,
-        cfg.rare_shard_paths,
-    )
-    return "block"
+def rare_bin_aggregates_stream(
+    classified_binned: DataFrame,
+    cfg: EngineConfig | None = None,
+    sizes: list[tuple[str, int]] | None = None,
+) -> DataFrame:
+    """Per-(source, bin) rare aggregates of binned events, 'exact' mode."""
+    return rare_per_bin(rare_events_stream(classified_binned, cfg, sizes=sizes, carry=("bin",)))
 
 
 def rare_counts_block_loop(
@@ -673,37 +441,44 @@ def _block_merge_kernel(pctile: float):
     return kernel
 
 
-def _block_rare(slim: DataFrame, cfg: EngineConfig, *, per_event: bool) -> DataFrame:
-    """Shared 5-stage 'block' pipeline (physical shape + threshold-relaxation
-    contract documented on :func:`rare_bin_aggregates_block`).
 
-    ``slim``: (source, ts, seq, utokens) announcement rows, plus ``bin``
-    when ``per_event=False``.
+def rare_events_block(
+    events: DataFrame, cfg: EngineConfig | None = None, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Per-event rare counts under the 'block' relaxation — the salted,
+    fully-parallel skew path (north-star: "skewed sources are salted and
+    re-merged"). Output ``(source, ts, seq, *carry, rare)`` per gated
+    announcement, like :func:`rare_events_stream`.
 
-    ``per_event=True`` makes the final pass emit one row per GATED
-    announcement ``(source, ts, seq, rare)`` instead of per-(shard, bin)
-    partials. The salted thresholds and occurrence indices depend only on
-    per-source path order — never on ``bin_size`` — so this form is
-    width-independent: a multi-width plan runs the three block-mode kernels
-    ONCE and re-bins the per-event values per width
-    (:func:`rare_bins_from_events`), instead of 6x the job's most
-    expensive stage in exactly the hot-source regime that selects 'block'
-    (VERDICT r3 #2)."""
+    Physical shape:
+      1. per-source path index (JVM window; the only per-source sort),
+         salt = p // rare_shard_paths -> (source, shard) keys;
+      2. PASS A (mapInArrow, parallel over shards): per-shard token counts
+         — compact (<= vocab rows/shard);
+      3. RE-MERGE (applyInPandas per source over the compact counts):
+         prefix-sums across shards -> per-(shard, tok) start counts +
+         frozen per-shard P20 thresholds. O(vocab x shards) regardless of
+         event count, so the serial fraction stays negligible at any SF;
+      4. PASS B (mapInArrow, parallel over shards): start rows are UNIONed
+         into the element stream ahead of each shard (state injection),
+         the kernel computes global occurrence = start + local cumcount,
+         flags rare (occ < thr) and gates (p+1 >= rare_block).
+
+    Threshold semantics are the documented relaxation of quirk Q5 (frozen
+    per shard, prior-shards-only — see rare_counts_block_loop); occurrence
+    indices and gating are identical to 'exact'. Zero leakage holds:
+    every threshold and occurrence uses strictly-prior paths."""
+    cfg = cfg or EngineConfig()
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     S = cfg.rare_shard_paths
     block, pct = cfg.rare_block, cfg.rare_pctile
-    carry = ["ts", "seq"] if per_event else ["bin"]
+    cols = ["ts", "seq", *carry]
 
     wp = Window.partitionBy("source").orderBy("ts", "seq")
-    paths = slim.select(
-        "source",
-        *carry,
-        "utokens",
-        (F.row_number().over(wp) - 1).alias("p"),
+    paths = _announced_paths(events, cols).select(
+        "*", (F.row_number().over(wp) - 1).alias("p")
     ).withColumn("shard", F.floor(F.col("p") / S))
     part = paths.repartition("source", "shard").sortWithinPartitions(
         "source", "shard", "p"
@@ -720,8 +495,7 @@ def _block_rare(slim: DataFrame, cfg: EngineConfig, *, per_event: bool) -> DataF
 
     def pass_a(batches):
         # vectorized per-(source, shard) token counts: batches arrive sorted
-        # by (source, shard, p), so keys form contiguous runs. Columns are
-        # resolved by NAME (the per-bin and per-event layouts differ).
+        # by (source, shard, p), so keys form contiguous runs
         acc: dict[tuple, list] = {}
         for b in batches:
             nm = b.schema.names
@@ -768,7 +542,7 @@ def _block_rare(slim: DataFrame, cfg: EngineConfig, *, per_event: bool) -> DataF
         "source",
         "shard",
         F.col("p"),
-        *carry,
+        *cols,
         "utokens",
         F.lit(None).cast("long").alias("tok"),
         F.lit(None).cast("long").alias("start_cnt"),
@@ -779,7 +553,7 @@ def _block_rare(slim: DataFrame, cfg: EngineConfig, *, per_event: bool) -> DataF
         "source",
         "shard",
         F.lit(None).cast("long").alias("p"),
-        *[F.lit(None).cast("long").alias(c) for c in carry],
+        *[F.lit(None).cast("long").alias(c) for c in cols],
         F.lit(None).cast("array<int>").alias("utokens"),
         "tok",
         "start_cnt",
@@ -791,36 +565,7 @@ def _block_rare(slim: DataFrame, cfg: EngineConfig, *, per_event: bool) -> DataF
         .repartition("source", "shard")
         .sortWithinPartitions("source", "shard", "marker", "p")
     )
-
-    if per_event:
-        out_pa = pa.schema(
-            [
-                ("source", pa.string()),
-                ("ts", pa.int64()),
-                ("seq", pa.int64()),
-                ("rare", pa.int64()),
-            ]
-        )
-        out_spark = RARE_EVENT_SCHEMA
-    else:
-        out_pa = pa.schema(
-            [
-                ("source", pa.string()),
-                ("bin", pa.int64()),
-                ("rare_sum", pa.int64()),
-                ("rare_max", pa.int64()),
-                ("n_paths", pa.int64()),
-            ]
-        )
-        out_spark = T.StructType(
-            [
-                T.StructField("source", T.StringType()),
-                T.StructField("bin", T.LongType()),
-                T.StructField("rare_sum", T.LongType()),
-                T.StructField("rare_max", T.LongType()),
-                T.StructField("n_paths", T.LongType()),
-            ]
-        )
+    arrow_schema, spark_schema = _event_schemas(cols)
 
     def pass_b(batches):
         # buffers for the current (source, shard) group
@@ -831,19 +576,14 @@ def _block_rare(slim: DataFrame, cfg: EngineConfig, *, per_event: bool) -> DataF
         e_flat: list[np.ndarray] = []
         e_lens: list[np.ndarray] = []
         e_p: list[np.ndarray] = []
-        e_carry: dict[str, list[np.ndarray]] = {c: [] for c in carry}
+        e_vals: dict[str, list[np.ndarray]] = {c: [] for c in cols}
 
         def flush():
             if cur is None or not e_lens:
                 return None
-            flat = (
-                np.concatenate(e_flat).astype(np.int64)
-                if e_flat
-                else np.zeros(0, dtype=np.int64)
-            )
+            flat = np.concatenate(e_flat).astype(np.int64)
             lens = np.concatenate(e_lens)
             ps = np.concatenate(e_p)
-            cvals = {c: np.concatenate(e_carry[c]) for c in carry}
             # local post-increment occurrence within the shard (argsort trick)
             n_el = len(flat)
             occ = np.zeros(n_el, dtype=np.int64)
@@ -869,43 +609,16 @@ def _block_rare(slim: DataFrame, cfg: EngineConfig, *, per_event: bool) -> DataF
                     occ = occ + np.where(hit, sc[pos_c], 0)
             is_rare = occ < s_thr[0]
             path_of = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
-            rare = np.bincount(path_of[is_rare], minlength=len(lens)).astype(np.int64)
-            g = (ps + 1) >= block
-            if not g.any():
-                return None
-            if per_event:
-                k = int(g.sum())
-                return pa.record_batch(
-                    [
-                        pa.array([cur[0]] * k, pa.string()),
-                        pa.array(cvals["ts"][g], pa.int64()),
-                        pa.array(cvals["seq"][g], pa.int64()),
-                        pa.array(rare[g], pa.int64()),
-                    ],
-                    schema=out_pa,
-                )
-            df = pd.DataFrame({"bin": cvals["bin"][g], "rare": rare[g]})
-            a = df.groupby("bin")["rare"].agg(["sum", "max", "count"]).reset_index()
-            return pa.record_batch(
-                [
-                    pa.array([cur[0]] * len(a), pa.string()),
-                    pa.array(a["bin"], pa.int64()),
-                    pa.array(a["sum"], pa.int64()),
-                    pa.array(a["max"], pa.int64()),
-                    pa.array(a["count"], pa.int64()),
-                ],
-                schema=out_pa,
-            )
+            rare = np.bincount(path_of[is_rare], minlength=len(lens))
+            vals = {c: np.concatenate(v) for c, v in e_vals.items()}
+            return _event_batch(cur[0], vals, rare, (ps + 1) >= block, arrow_schema)
 
         for b in batches:
             nm = b.schema.names
             src = b.column(nm.index("source")).to_numpy(zero_copy_only=False)
             shard = b.column(nm.index("shard")).to_numpy(zero_copy_only=False)
             pcol = b.column(nm.index("p")).to_numpy(zero_copy_only=False)
-            carr = {
-                c: b.column(nm.index(c)).to_numpy(zero_copy_only=False)
-                for c in carry
-            }
+            cvals = {c: b.column(nm.index(c)).to_numpy(zero_copy_only=False) for c in cols}
             toks = b.column(nm.index("utokens"))
             tok = b.column(nm.index("tok")).to_numpy(zero_copy_only=False)
             start_cnt = b.column(nm.index("start_cnt")).to_numpy(zero_copy_only=False)
@@ -928,7 +641,7 @@ def _block_rare(slim: DataFrame, cfg: EngineConfig, *, per_event: bool) -> DataF
                     cur = key
                     s_tok, s_cnt, s_thr = [], [], [0.0]
                     e_flat, e_lens, e_p = [], [], []
-                    e_carry = {c: [] for c in carry}
+                    e_vals = {c: [] for c in cols}
                 # start rows (marker -1) precede elements within the run
                 mk = marker[i:j]
                 n_start = int((mk == -1).sum())
@@ -945,239 +658,20 @@ def _block_rare(slim: DataFrame, cfg: EngineConfig, *, per_event: bool) -> DataF
                         .astype(np.int64)
                     )
                     e_p.append(pcol[i + n_start : j].astype(np.int64))
-                    for c in carry:
-                        e_carry[c].append(carr[c][i + n_start : j].astype(np.int64))
+                    for c in cols:
+                        e_vals[c].append(cvals[c][i + n_start : j].astype(np.int64))
         rb = flush()
         if rb is not None:
             yield rb
 
-    out = union.mapInArrow(pass_b, out_spark)
-    if per_event:
-        return out
-    return out.groupBy("source", "bin").agg(
-        F.sum("rare_sum").alias("number_rare_ases"),
-        F.max("rare_max").alias("rare_ases_max"),
-        (F.sum("rare_sum") / F.sum("n_paths")).alias("rare_ases_avg"),
-    )
+    return union.mapInArrow(pass_b, spark_schema)
 
 
 def rare_bin_aggregates_block(
     classified_binned: DataFrame, cfg: EngineConfig | None = None
 ) -> DataFrame:
-    """Salted, fully-parallel rare aggregates — the 10^12-row skew path
-    (north-star: "skewed sources are salted and re-merged").
-
-    Physical shape (shared with :func:`rare_events_block` via _block_rare):
-      1. per-source path index (JVM window; the only per-source sort),
-         salt = p // rare_shard_paths -> (source, shard) keys;
-      2. PASS A (mapInArrow, parallel over shards): per-shard token counts
-         — compact (<= vocab rows/shard);
-      3. RE-MERGE (applyInPandas per source over the compact counts):
-         prefix-sums across shards -> per-(shard, tok) start counts +
-         frozen per-shard P20 thresholds. O(vocab x shards) regardless of
-         event count, so the serial fraction stays negligible at any SF;
-      4. PASS B (mapInArrow, parallel over shards): start rows are UNIONed
-         into the element stream ahead of each shard (state injection),
-         the kernel computes global occurrence = start + local cumcount,
-         flags rare (occ < thr), gates (p+1 >= rare_block), and emits
-         per-(shard, bin) partials;
-      5. final groupBy(source, bin) re-merges partials (sum/max/weighted
-         avg).
-
-    Threshold semantics are the documented relaxation of quirk Q5 (frozen
-    per shard, prior-shards-only — see rare_counts_block_loop); occurrence
-    indices and gating are identical to 'exact'. Zero leakage holds:
-    every threshold and occurrence uses strictly-prior paths."""
-    cfg = cfg or EngineConfig()
-    from pyspark.sql import functions as F
-
-    slim = classified_binned.filter(
-        (F.col("kind") == "ann") & F.col("tokens").isNotNull()
-    ).select("source", "bin", "ts", "seq", F.array_distinct("tokens").alias("utokens"))
-    return _block_rare(slim, cfg, per_event=False)
-
-
-def rare_events_block(events: DataFrame, cfg: EngineConfig | None = None) -> DataFrame:
-    """Per-EVENT rare counts under the 'block' relaxation: one row per
-    gated announcement ``(source, ts, seq, rare)``.
-
-    Width-independent twin of :func:`rare_bin_aggregates_block` — same
-    three kernels (pass A counts, threshold re-merge, pass B occurrence
-    scan), no ``bin`` required on input; re-bin per width with
-    :func:`rare_bins_from_events`. Re-binned output is value-identical to
-    running rare_bin_aggregates_block on the same events pre-binned at
-    that width (tests/test_rare_kernel.py)."""
-    cfg = cfg or EngineConfig()
-    from pyspark.sql import functions as F
-
-    slim = events.filter(
-        (F.col("kind") == "ann") & F.col("tokens").isNotNull()
-    ).select("source", "ts", "seq", F.array_distinct("tokens").alias("utokens"))
-    return _block_rare(slim, cfg, per_event=True)
-
-
-
-
-THR_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType()),
-        T.StructField("m", T.LongType()),
-        T.StructField("thr", T.DoubleType()),
-    ]
-)
-
-
-def _thr_kernel(cfg: EngineConfig):
-    block, pct = cfg.rare_block, cfg.rare_pctile
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_levels = int(pdf["n_paths"].iloc[0]) // block
-        if n_levels == 0:
-            return pd.DataFrame({"source": [], "m": [], "thr": []}).astype(
-                {"source": str, "m": np.int64, "thr": np.float64}
-            )
-        tok_id = pd.factorize(pdf["tok"].to_numpy())[0]
-        m_min = pdf["m_min"].to_numpy(dtype=np.int64)
-        add = pdf["add"].to_numpy(dtype=np.int64)
-        V = int(tok_id.max()) + 1 if len(tok_id) else 1
-        order = np.argsort(m_min, kind="stable")
-        bounds = np.searchsorted(m_min[order], np.arange(1, n_levels + 2))
-        counts = np.zeros(V, dtype=np.int64)
-        thr = np.zeros(n_levels + 1, dtype=np.float64)
-        for m in range(1, n_levels + 1):
-            sl = order[bounds[m - 1] : bounds[m]]
-            if len(sl):
-                counts += np.bincount(tok_id[sl], weights=add[sl], minlength=V).astype(
-                    np.int64
-                )
-            seen = counts[counts > 0]
-            if len(seen):
-                thr[m] = np.percentile(seen, pct)
-        return pd.DataFrame(
-            {
-                "source": pdf["source"].iloc[0],
-                "m": np.arange(1, n_levels + 1, dtype=np.int64),
-                "thr": thr[1:],
-            }
-        )
-
-    return kernel
-
-
-def rare_bin_aggregates_dist(
-    classified_binned: DataFrame, cfg: EngineConfig | None = None
-) -> DataFrame:
-    """Distributed twin of :func:`rare_bin_aggregates` — same numbers, no
-    hot-source straggler.
-
-    Measured reality (8M rows / 20 sources / local[16]): the exploded
-    element stream (~50M rows through two windows + three shuffles) costs
-    more wall-clock than the Arrow-stream kernel it replaces (rare stage
-    40s vs 23s; whole pipeline 80s vs 29s), so this is NOT the default
-    scale path — 'exact' (+ LPT packing) covers sources that fit a task,
-    'block' covers hot sources. Use 'dist' only when a single source's
-    unique-token stream exceeds one worker's memory AND the frozen-shard
-    relaxation of 'block' is unacceptable: it is the one mode that keeps
-    exact semantics with bounded per-task state.
-
-    The reference's sequential recurrence (Q5, bgpmetrics_as.py:601-628)
-    decomposes into relational pieces that Spark parallelizes:
-
-      * post-increment token frequency == 1-based occurrence index of the
-        token in the per-source unique-token stream == ``row_number() OVER
-        (PARTITION BY source, tok ORDER BY path_idx)`` — fine-grained keys,
-        fully parallel, pure JVM;
-      * per-path ordering == ``row_number() OVER (PARTITION BY source ORDER
-        BY ts, seq)`` — skewed by source but JVM sort only (no Python on
-        this path), so a 40%-hot source costs one in-memory sort, not one
-        serialized Python fold;
-      * the threshold sequence (exact P20 re-percentiled every ``block``
-        paths) IS inherently sequential — but it only needs the tiny
-        pre-aggregated ``(tok, m_min, add)`` stream (bounded by
-        vocab x levels, not by events), so the per-source Python fold
-        handles a 40%-hot source in ~1s where the full fold took ~18s;
-      * rarity (occ < thr[level]) and the per-bin sum/max/avg are then a
-        broadcast join + hash aggregate.
-
-    Exactness is bit-for-bit with the fold kernel (asserted in
-    tests/test_rare_kernel.py): snapshot m covers 0-based paths
-    0..block*m-2 (m_min = (p+block+1)//block), path p uses level
-    (p+1)//block, and stats gate at p+1 >= block."""
-    cfg = cfg or EngineConfig()
-    from pyspark.sql import functions as F
-
-    slim = classified_binned.filter(
-        (F.col("kind") == "ann") & F.col("tokens").isNotNull()
-    ).select("source", "bin", "ts", "seq", F.array_distinct("tokens").alias("utokens"))
-    per_path = _dist_rare_per_path(slim, cfg, ["bin"])
-    return per_path.groupBy("source", "bin").agg(
-        F.sum("rare").alias("number_rare_ases"),
-        F.max("rare").cast("long").alias("rare_ases_max"),
-        F.avg("rare").alias("rare_ases_avg"),
-    )
-
-
-def rare_events_dist(events: DataFrame, cfg: EngineConfig | None = None) -> DataFrame:
-    """Per-EVENT rare counts with exact Q5 semantics, fully distributed:
-    one row per gated announcement ``(source, ts, seq, rare)``.
-
-    Width-independent twin of :func:`rare_bin_aggregates_dist` (same
-    occurrence windows + threshold fold; the recurrence never depends on
-    ``bin_size``, VERDICT r3 #2) — re-bin per width with
-    :func:`rare_bins_from_events`."""
-    cfg = cfg or EngineConfig()
-    from pyspark.sql import functions as F
-
-    slim = events.filter(
-        (F.col("kind") == "ann") & F.col("tokens").isNotNull()
-    ).select("source", "ts", "seq", F.array_distinct("tokens").alias("utokens"))
-    per_path = _dist_rare_per_path(slim, cfg, ["ts", "seq"])
-    return per_path.select(
-        "source", "ts", "seq", F.col("rare").cast("long").alias("rare")
-    )
-
-
-def _dist_rare_per_path(slim: DataFrame, cfg: EngineConfig, carry: list[str]) -> DataFrame:
-    """Shared relational core of 'dist' mode: one row per GATED path
-    ``(source, p, *carry, rare)``. ``slim`` must have (source, ts, seq,
-    utokens); carry columns are passed through untouched."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    block = cfg.rare_block
-    wp = Window.partitionBy("source").orderBy("ts", "seq")
-    paths = slim.select(
-        "source", *carry, "utokens", (F.row_number().over(wp) - 1).alias("p")
-    )
-    n_paths = paths.groupBy("source").agg(F.count(F.lit(1)).alias("n_paths"))
-
-    elems = paths.select("source", "p", F.explode("utokens").alias("tok"))
-
-    # threshold branch: pre-aggregate to (tok, first-contributing-level, add)
-    thr_in = (
-        elems.withColumn("m_min", F.floor((F.col("p") + block + 1) / block))
-        .groupBy("source", "tok", "m_min")
-        .agg(F.count(F.lit(1)).alias("add"))
-        .join(F.broadcast(n_paths), "source")
-        .filter(F.col("m_min") <= F.floor(F.col("n_paths") / block))
-    )
-    thr = thr_in.groupBy("source").applyInPandas(_thr_kernel(cfg), THR_SCHEMA)
-
-    # rarity branch: occurrence index vs the level threshold
-    wo = Window.partitionBy("source", "tok").orderBy("p")
-    occ = elems.withColumn("occ", F.row_number().over(wo))
-    rare_per_path = (
-        occ.withColumn("m", F.floor((F.col("p") + 1) / block))
-        .join(F.broadcast(thr), ["source", "m"], "left")
-        .filter(F.col("occ") < F.coalesce("thr", F.lit(0.0)))
-        .groupBy("source", "p")
-        .agg(F.count(F.lit(1)).alias("rare"))
-    )
-
-    gated = paths.filter(F.col("p") + 1 >= block).select("source", "p", *carry)
-    return gated.join(rare_per_path, ["source", "p"], "left").withColumn(
-        "rare", F.coalesce("rare", F.lit(0))
-    )
+    """Per-(source, bin) rare aggregates of binned events, 'block' mode."""
+    return rare_per_bin(rare_events_block(classified_binned, cfg, carry=("bin",)))
 
 
 def join_rare(
@@ -1194,8 +688,6 @@ def join_rare(
     (the hot-source rare task hides under the classify/agg work), and AQE
     still converts the join to broadcast at runtime — the rare side is one
     row per (source, bin)."""
-    from pyspark.sql import functions as F
-
     if rare_pb is None:
         return (
             per_bin.withColumn("number_rare_ases", F.lit(0).cast("long"))

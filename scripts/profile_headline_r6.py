@@ -33,9 +33,10 @@ from bgp_feature_extractor_spark.operators.aggregates import (
     aggregate_bins,
     fold_bin_aggregates,
 )
+from bgp_feature_extractor_spark.operators.asof import classify_window
 from bgp_feature_extractor_spark.operators.binning import first_ts_per_source, with_bin
 from bgp_feature_extractor_spark.operators.rare import rare_bin_aggregates_stream
-from bgp_feature_extractor_spark.plans.feature_matrix import classify, feature_matrix
+from bgp_feature_extractor_spark.plans.feature_matrix import feature_matrix
 from bgp_feature_extractor_spark.session import get_spark
 
 GATE = float(os.environ.get("R6_LOAD_GATE", "3.0"))
@@ -77,7 +78,7 @@ def main():
     sizes = [
         (r["source"], int(r["n_rows"])) for r in firsts.select("source", "n_rows").collect()
     ]
-    cl = classify(ev, None, cfg)
+    cl = classify_window(ev, None, cfg)
     timed("classify", cl)
     binned = with_bin(cl, firsts, cfg)
     dist = with_edit_distance(binned, "tokens", "prev_tokens").drop("prev_tokens")

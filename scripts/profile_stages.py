@@ -22,13 +22,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bgp_feature_extractor_spark.config import EngineConfig
 from bgp_feature_extractor_spark.functions.editdist import with_edit_distance
 from bgp_feature_extractor_spark.operators.aggregates import aggregate_bins
+from bgp_feature_extractor_spark.operators.asof import classify_window
 from bgp_feature_extractor_spark.operators.binning import (
     dense_spine,
     first_ts_per_source,
     with_bin,
 )
 from bgp_feature_extractor_spark.operators.rare import join_rare, rare_bin_aggregates_stream
-from bgp_feature_extractor_spark.plans.feature_matrix import classify, feature_matrix
+from bgp_feature_extractor_spark.plans.feature_matrix import feature_matrix
 from bgp_feature_extractor_spark.session import get_spark
 from bgp_feature_extractor_spark.sources.synth import synth_events
 
@@ -79,7 +80,7 @@ def main():
 
     firsts = first_ts_per_source(ev).cache()
     timed("scan_only", ev)
-    cl = classify(ev, None, cfg)
+    cl = classify_window(ev, None, cfg)
     timed("classify", cl)
     binned = with_bin(cl, firsts, cfg)
     dist = with_edit_distance(binned, "tokens", "prev_tokens").drop("prev_tokens")

@@ -194,7 +194,7 @@ def main():
         else f"exec{os.environ['SPARK_GRAFT_EXEC_BATCH']}_mean",
         "hot_pct": HOT_PCT,
         "n_sources": N_SOURCES, "ts_scale": TS_SCALE,
-        "rare_mode": os.environ.get("SPARK_GRAFT_RARE_MODE", "auto"),
+        "rare_mode": os.environ.get("SPARK_GRAFT_RARE_MODE", "exact"),
         # shuffle-dir series tag: rows taken with tmpfs local dirs (the
         # noisy-I/O-window series, round 4) are a SEPARATE series from the
         # default /tmp rows — protocol minima never mix the two

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import types as T
@@ -32,7 +34,16 @@ SNAPSHOT_SCHEMA = T.StructType(
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="engine-tests", master="local[4]", shuffle_partitions=8)
+    # Test inputs are small: a bounded heap keeps the one test JVM from
+    # growing toward get_spark's 48g default, past a small host's memory
+    # (where the JVM is killed and every later test loses its session).
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g")
+    s = get_spark(
+        app_name="engine-tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": mem},
+    )
     yield s
 
 

@@ -57,42 +57,50 @@ def test_iceberg_fallback_roundtrip(spark, tmp_path):
 
 
 def test_rare_auto_mode_switches_plan(spark, events_parquet):
-    """'auto' rare mode (the default) must pick the per-source-sequential
-    exact kernel for small sources and the fully-parallel salted 'block'
-    path once ONE source crosses rare_auto_rows — without any caller flag.
-    'block' is identifiable by its applyInPandas re-merge stage
-    (FlatMapGroupsInPandas); 'exact' has none."""
+    """rare_mode picks the plan explicitly: 'block' runs the salted kernel,
+    identifiable by its applyInPandas re-merge stage
+    (FlatMapGroupsInPandas); 'exact' (the default) has none."""
     import dataclasses
 
-    small_thr = dataclasses.replace(EngineConfig(), rare_mode="auto", rare_auto_rows=10)
-    big_thr = dataclasses.replace(EngineConfig(), rare_mode="auto", rare_auto_rows=10**9)
-
-    plan_block = _plan(feature_matrix(events_parquet, None, small_thr))
-    plan_exact = _plan(feature_matrix(events_parquet, None, big_thr))
-    assert "FlatMapGroupsInPandas" in plan_block, "auto did not escalate to block"
-    assert "FlatMapGroupsInPandas" not in plan_exact, "auto did not stay exact"
+    plan_block = _plan(
+        feature_matrix(events_parquet, None, dataclasses.replace(EngineConfig(), rare_mode="block"))
+    )
+    plan_exact = _plan(feature_matrix(events_parquet, None, EngineConfig()))
+    assert EngineConfig().rare_mode == "exact"
+    assert "FlatMapGroupsInPandas" in plan_block, "block mode did not plan the salted kernel"
+    assert "FlatMapGroupsInPandas" not in plan_exact, "exact mode planned the salted kernel"
 
 
 def test_rare_auto_block_values_match_exact_below_shard(spark, events_parquet):
     """Below one shard (rare_shard_paths) the block relaxation is
-    value-identical to exact — so the auto switch cannot silently change
-    results at the scale where both run in tests."""
+    value-identical to exact."""
     import dataclasses
-
-    from pyspark.sql import functions as F
 
     exact = feature_matrix(
         events_parquet, None, dataclasses.replace(EngineConfig(), rare_mode="exact")
     )
-    auto_block = feature_matrix(
-        events_parquet,
-        None,
-        dataclasses.replace(EngineConfig(), rare_mode="auto", rare_auto_rows=10),
+    block = feature_matrix(
+        events_parquet, None, dataclasses.replace(EngineConfig(), rare_mode="block")
     )
     cols = ["source", "bin", "number_rare_ases", "rare_ases_max", "rare_ases_avg"]
     a = exact.select(cols).orderBy("source", "bin").toPandas()
-    b = auto_block.select(cols).orderBy("source", "bin").toPandas()
+    b = block.select(cols).orderBy("source", "bin").toPandas()
     assert a.equals(b)
+
+
+@pytest.mark.parametrize("mode", ["fold", "dist", "auto", "Exact"])
+def test_unknown_rare_mode_rejected(events_parquet, mode):
+    """An unknown rare_mode fails when the plan is built instead of
+    silently zero-filling the rare family."""
+    import dataclasses
+
+    from bgp_feature_extractor_spark.plans.feature_matrix import multi_width_matrices
+
+    cfg = dataclasses.replace(EngineConfig(), rare_mode=mode)
+    with pytest.raises(ValueError, match="rare_mode"):
+        feature_matrix(events_parquet, None, cfg)
+    with pytest.raises(ValueError, match="rare_mode"):
+        multi_width_matrices(events_parquet, None, cfg, widths=(1, 5))
 
 
 def test_partitioned_events_prune(spark, tmp_path):

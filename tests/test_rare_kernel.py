@@ -91,46 +91,65 @@ def test_block_mode_matches_contract_oracle(spark):
     )
 
 
-@pytest.mark.parametrize("variant", ["dist", "stream"])
+@pytest.mark.parametrize("variant", ["stream"])
 def test_distributed_equals_fold(spark, variant):
-    """Both scale-out physical plans — the Arrow-streaming kernel
-    ('exact') and the JVM-window relational decomposition ('dist') — are
-    bit-identical to the per-source Python fold ('fold'), including empty
+    """The Arrow-streaming kernel ('exact') is bit-identical to the per-bin
+    values of the dict-loop fold (rare_counts_loop, the reference control
+    flow transliterated) replayed per source in pandas — including empty
     token arrays, sub-block sources, and block boundaries."""
     from dataclasses import replace
+
+    import pandas as pd
 
     from bgp_feature_extractor_spark.config import EngineConfig
     from bgp_feature_extractor_spark.operators.binning import (
         first_ts_per_source,
         with_bin,
     )
-    from bgp_feature_extractor_spark.operators.rare import (
-        rare_bin_aggregates,
-        rare_bin_aggregates_dist,
-        rare_bin_aggregates_stream,
-    )
+    from bgp_feature_extractor_spark.operators.rare import rare_bin_aggregates_stream
     from bgp_feature_extractor_spark.sources.synth import synth_events
 
-    fn = {"dist": rare_bin_aggregates_dist, "stream": rare_bin_aggregates_stream}[variant]
+    assert variant == "stream"  # the one reference-exact distributed kernel
     cfg = replace(EngineConfig(), rare_block=50)
     ev = synth_events(spark, 5_000, n_sources=4, entities_per_source=50, vocab=200)
-    binned = with_bin(ev, first_ts_per_source(ev), cfg)
-    fold = rare_bin_aggregates(binned, cfg).toPandas()
-    dist = fn(binned, cfg).toPandas()
+    binned = with_bin(ev, first_ts_per_source(ev), cfg).cache()
+    pdf = binned.filter("kind = 'ann' AND tokens IS NOT NULL").select(
+        "source", "bin", "ts", "seq", "tokens"
+    ).toPandas()
+    rows = []
+    for src, g in pdf.groupby("source"):
+        g = g.sort_values(["ts", "seq"], kind="stable")
+        paths = [list(dict.fromkeys(int(t) for t in toks)) for toks in g["tokens"]]
+        rare, gated = rare_counts_loop(paths, block=50, pctile=20.0)
+        sub = pd.DataFrame(
+            {"bin": g["bin"].to_numpy()[gated], "rare": rare[gated].astype(np.int64)}
+        )
+        a = sub.groupby("bin")["rare"].agg(["sum", "max", "mean"]).reset_index()
+        a.insert(0, "source", src)
+        rows.append(a)
     key = ["source", "bin"]
-    fold = fold.sort_values(key).reset_index(drop=True)
-    dist = dist.sort_values(key).reset_index(drop=True)[fold.columns]
-    assert fold.shape == dist.shape and fold.shape[0] > 0
-    np.testing.assert_array_equal(fold.values, dist.values)
+    fold = (
+        pd.concat(rows)
+        .rename(
+            columns={"sum": "number_rare_ases", "max": "rare_ases_max", "mean": "rare_ases_avg"}
+        )
+        .sort_values(key)
+        .reset_index(drop=True)
+    )
+    got = rare_bin_aggregates_stream(binned, cfg).toPandas()
+    got = got.sort_values(key).reset_index(drop=True)[fold.columns]
+    assert fold.shape == got.shape and fold.shape[0] > 0
+    assert (fold["number_rare_ases"] > 0).any()
+    np.testing.assert_array_equal(fold.values, got.values)
 
 
-@pytest.mark.parametrize("mode", ["block", "dist", "fold"])
+@pytest.mark.parametrize("mode", ["block"])
 def test_per_event_rebinned_equals_per_bin(spark, mode):
-    """Width-independent per-event twins (VERDICT r3 #2): every rare mode's
-    ``rare_events_*`` variant, re-binned at a width via
-    rare_bins_from_events, equals running that mode's per-bin kernel on the
-    events pre-binned at the same width — for two different widths from ONE
-    per-event frame (the multi-width sharing contract)."""
+    """Width-independent per-event kernel: ``rare_events_block`` output,
+    re-binned at a width via rare_bins_from_events, equals the block mode's
+    per-bin aggregates of the events pre-binned at the same width —
+    for two different widths from ONE per-event frame (the multi-width
+    sharing contract)."""
     from dataclasses import replace
 
     import pandas as pd
@@ -148,22 +167,13 @@ def test_per_event_rebinned_equals_per_bin(spark, mode):
         spark, 5_000, n_sources=4, entities_per_source=50, vocab=200
     ).cache()
     firsts = first_ts_per_source(ev)
-    events_fn = {
-        "block": R.rare_events_block,
-        "dist": R.rare_events_dist,
-        "fold": R.rare_events_fold,
-    }[mode]
-    bins_fn = {
-        "block": R.rare_bin_aggregates_block,
-        "dist": R.rare_bin_aggregates_dist,
-        "fold": R.rare_bin_aggregates,
-    }[mode]
-    per_event = events_fn(ev, cfg)
+    assert mode == "block"
+    per_event = R.rare_events_block(ev, cfg)
     key = ["source", "bin"]
     for w in (1, 5):
         wcfg = replace(cfg, minutes_window=w)
         got = R.rare_bins_from_events(per_event, firsts, wcfg).toPandas()
-        want = bins_fn(with_bin(ev, firsts, wcfg), wcfg).toPandas()
+        want = R.rare_bin_aggregates_block(with_bin(ev, firsts, wcfg), wcfg).toPandas()
         got = got.sort_values(key).reset_index(drop=True)[sorted(got.columns)]
         want = want.sort_values(key).reset_index(drop=True)[sorted(want.columns)]
         assert want.shape[0] > 0
