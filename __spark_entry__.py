@@ -1,11 +1,15 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for the BGP feature-matrix engine (PySpark target).
 
 ``entry(spark)`` runs the flagship point-in-time feature-matrix pipeline on
-sf0.001; ``queries()`` exposes every implemented operator from SURVEY.md §2
-(plus the training-data-pipeline extensions); ``oracle_sql()`` carries the
-DuckDB twin for every SQL-expressible operator. Non-SQL-expressible pieces
-(the sequential rare-token fold Q5) are covered rows-only here and by the
-pandas-oracle pytest suite.
+sf0.001. ``queries()`` exposes the paper's dataflow one stage at a time:
+event-time bins, pivots, windows and sessions, as-of classification, the
+feature matrix at one width and at the six reference widths, the rare-token
+recurrence, labels, ratios, padding, the CSV round trip and the streaming
+bin counts, plus the embedding cosine top-k, near-duplicate and ANN
+queries. ``oracle_sql()`` carries a DuckDB twin for every query. In the
+matrix queries the warm-up gate pins the rare columns to zero at the
+driver's scale factor, and their twins assert exactly that; ``rare_bins``
+and ``multi_width_rare`` lower the gate and check nonzero rare values.
 """
 
 from __future__ import annotations
@@ -16,9 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bgp_feature_extractor_spark.config import EngineConfig, golden_columns
-from bgp_feature_extractor_spark.functions import text as TX
-from bgp_feature_extractor_spark.operators import dedup as DD
+from bgp_feature_extractor_spark.config import EngineConfig
 from bgp_feature_extractor_spark.operators import similarity as SIM
 from bgp_feature_extractor_spark.operators import windows as WIN
 from bgp_feature_extractor_spark.plans.feature_matrix import feature_matrix
@@ -46,18 +48,9 @@ def _doc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return documents_to_events(_t(spark, sf_dir, "documents"), entities=ENTITIES)
 
 
-def _word_tokens_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with an int token per word: first 60 bits of md5(word)
-    (deterministic + SQL-mirrorable; rich enough that distinct words don't
-    collide, which keeps LSH candidate sets honest)."""
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", TX.word_hash_tokens(F.col("text")).alias("tokens")
-    )
-
-
 def _materialized(out: DataFrame, caches: list[DataFrame]) -> DataFrame:
     """Persist + eagerly materialize ``out``, then free every intermediate
-    cache (VERDICT r4 #7: the correctness driver runs all 34 queries in ONE
+    cache (VERDICT r4 #7: the correctness gate runs every query in ONE
     session; without this the three multi-width queries accumulate their
     persisted classify/editdist/rare frames for the whole session). The
     only residual is the bounded result frame itself — callers that keep
@@ -505,77 +498,6 @@ def q_before_during_after(spark, sf_dir):
     )
 
 
-def q_dedup_exact(spark, sf_dir):
-    """Exact dedup over documents text."""
-    d = DD.dedup_exact(_t(spark, sf_dir, "documents"), ["text"], "doc_id")
-    return d.select("content_key", "keep_id", "n_copies")
-
-
-def q_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH near-dup candidate pairs (shingle->minhash->band->join).
-    The signature frame is persisted for the run (three consumers) and
-    freed via _materialized once the pair set is computed."""
-    caches: list[DataFrame] = []
-    out = DD.minhash_lsh_pairs(
-        _word_tokens_docs(spark, sf_dir), "doc_id", "tokens", n_hashes=32, bands=4,
-        caches=caches,
-    )
-    return _materialized(out, caches)
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    """3-gram Jaccard similarity pairs within (source, lang) blocks."""
-    d = _word_tokens_docs(spark, sf_dir)
-    return DD.ngram_jaccard_pairs(
-        d.filter(F.size("tokens") >= 3), "doc_id", "tokens", ["source", "lang"], n=3, threshold=0.2
-    )
-
-
-def q_ngram_jaccard_lsh(spark, sf_dir):
-    """Scale path for near-dup: LSH candidates over the shingle space,
-    exact 3-gram Jaccard verified ONLY on candidates (no all-pairs block
-    join)."""
-    d = _word_tokens_docs(spark, sf_dir)
-    # no caches here: measured A/B at sf0.1 — the persist+materialize round
-    # trip costs more than the duplicate shingle subtrees it saves (2.8s vs
-    # 3.4s), because the candidate set is tiny and exchange reuse already
-    # shares the heavy shuffles
-    out = DD.ngram_jaccard_lsh_pairs(
-        d, "doc_id", "tokens", n=3, threshold=0.2, n_hashes=32, bands=4
-    )
-    return out.select("id_a", "id_b", F.round("jaccard", EMB_ROUND).alias("jaccard"))
-
-
-def q_simhash(spark, sf_dir):
-    """SimHash fingerprints per document."""
-    d = _word_tokens_docs(spark, sf_dir)
-    return d.select("doc_id", DD.simhash(F.col("tokens")).alias("simhash"))
-
-
-def q_text_stats(spark, sf_dir):
-    """Token counting, quality scoring, language-ID, fingerprinting.
-
-    The word arrays (plain + lowercased) are projected ONCE and every stat
-    reads them via the *_w twins — identical expressions over identical
-    values, but the split+filter runs once per row instead of once per
-    stat (functions/text.py; measured 1.27s -> 0.88s at sf0.1)."""
-    t = F.col("text")
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", "text", TX.words(t).alias("_w"), TX.words(F.lower(t)).alias("_wl")
-    )
-    w, wl = F.col("_w"), F.col("_wl")
-    return d.select(
-        "doc_id",
-        F.size(w).cast("long").alias("n_words"),
-        TX.subtoken_count_w(w).alias("n_subtokens"),
-        F.round(TX.stopword_ratio_w(wl), EMB_ROUND).alias("stopword_ratio"),
-        F.round(TX.punct_ratio(t), EMB_ROUND).alias("punct_ratio"),
-        F.round(TX.quality_score_w(w, wl, t), EMB_ROUND).alias("quality"),
-        TX.lang_guess_w(wl).alias("lang_guess"),
-        TX.fingerprint_w(w).alias("fingerprint"),
-    )
-
-
 def q_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-10 against the vec_id=0 embedding."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -680,64 +602,6 @@ def q_ann_ivf(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def q_corpus_prep(spark, sf_dir):
-    """End-to-end corpus funnel: quality gate -> exact dedup -> LSH
-    near-dup candidates -> exact-Jaccard verification (>=0.8 on distinct
-    word-token sets) -> drop larger id -> per-doc stats
-    (plans/corpus_prep.py). The whole composition — including the greedy
-    verified-drop policy — has an exact DuckDB twin."""
-    from bgp_feature_extractor_spark.plans.corpus_prep import corpus_prep
-
-    caches: list[DataFrame] = []
-    out = corpus_prep(
-        _t(spark, sf_dir, "documents"), min_quality=0.3, min_words=5,
-        n_hashes=32, bands=4, quality_round=EMB_ROUND, jaccard_threshold=0.8,
-        caches=caches,
-    )
-    return _materialized(out, caches)
-
-
-def q_tpch_q1(spark, sf_dir):
-    """Generic OLAP agg surface (TPC-H Q1 shape)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            # fixed-point sums: order-insensitive exactness for the oracle hash
-            F.sum(F.round(F.col("l_quantity")).cast("long")).alias("sum_qty"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias(
-                "sum_base_price_cents"
-            ),
-            F.sum(
-                F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000).cast(
-                    "long"
-                )
-            ).alias("sum_disc_price_e4"),
-            F.round(F.avg(F.round(F.col("l_quantity")).cast("long")), EMB_ROUND).alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def q_revenue_by_nation(spark, sf_dir):
-    """Generic join surface: orders x customer x nation with broadcast dims."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("revenue_cents"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy("n_name")
-    )
-
-
 # --------------------------------------------------------------------------
 # streaming twins (SURVEY §2.12), driven END-TO-END through a memory sink
 # (VERDICT r4 #3: lift the pytest-only batch-equivalence into the driver's
@@ -766,16 +630,16 @@ def _staged_stream_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
         os.path.exists(src) and os.path.getmtime(src) > os.path.getmtime(marker)
     )
     if stale:
-        # 24 files vs maxFilesPerTrigger=8 => >=3 micro-batches, so the
-        # dedup state store is exercised ACROSS triggers, not within one
+        # 24 files vs maxFilesPerTrigger=2 => 12 micro-batches, so the
+        # aggregation state store is exercised ACROSS triggers, not within one
         _t(spark, sf_dir, table).repartition(24).write.mode("overwrite").parquet(base)
     return base
 
 
 def _drain_stream(df: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Run a finite streaming query to completion into a memory sink and
-    return the sink table. Driver-resident, but bounded: only dedup keys /
-    windowed aggregates flow through, never raw events."""
+    return the sink table. Driver-resident, but bounded: only windowed
+    aggregates flow through, never raw events."""
     spark = df.sparkSession
     q = (
         df.writeStream.outputMode(output_mode)
@@ -788,32 +652,6 @@ def _drain_stream(df: DataFrame, name: str, output_mode: str) -> DataFrame:
     finally:
         q.stop()
     return spark.table(name)
-
-
-def q_stream_dedup(spark, sf_dir):
-    """§2.12 streaming exact dedup end-to-end: readStream file source ->
-    md5 content keying -> watermark + dropDuplicates state store -> memory
-    sink (streaming/stream_features.stream_dedup_exact).
-
-    The oracle-checked projection is the distinct content-key SET. Which
-    doc_id survives per duplicated text is first-seen order — a function
-    of micro-batch file order, the standard streaming-dedup contract —
-    so it is deliberately not part of the deterministic comparison."""
-    from bgp_feature_extractor_spark.streaming.stream_features import (
-        read_document_stream,
-        stream_dedup_exact,
-    )
-
-    path = _staged_stream_dir(spark, sf_dir, "documents")
-    spark.catalog.dropTempView("stream_dedup_sink")
-    # watermark WIDER than the fixture's synthesized event-time span
-    # (event_ts = doc_id seconds): past-watermark state eviction would let
-    # a late duplicate re-emit (the documented streaming-dedup contract) —
-    # correct behavior, but it would make the distinct-set oracle flaky.
-    # Eviction-under-eviction is covered by tests/test_streaming.py.
-    deduped = stream_dedup_exact(read_document_stream(spark, path), watermark="365 days")
-    out = _drain_stream(deduped, "stream_dedup_sink", "append")
-    return out.select("content_key").orderBy("content_key")
 
 
 def q_stream_bin_counts(spark, sf_dir):
@@ -892,12 +730,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multi_width_rare": q_multi_width_rare,
         "pad_counts": q_pad_counts,
         "before_during_after": q_before_during_after,
-        "dedup_exact": q_dedup_exact,
-        "minhash_lsh": q_minhash_lsh,
-        "ngram_jaccard": q_ngram_jaccard,
-        "ngram_jaccard_lsh": q_ngram_jaccard_lsh,
-        "simhash": q_simhash,
-        "text_stats": q_text_stats,
         "cosine_topk": q_cosine_topk,
         "embedding_near_dup": q_embedding_near_dup,
         "embedding_near_dup_mb": q_embedding_near_dup_mb,
@@ -905,11 +737,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_lsh_indexed": q_ann_lsh_indexed,
         "ann_lsh_probes": q_ann_lsh_probes,
         "ann_ivf": q_ann_ivf,
-        "corpus_prep": q_corpus_prep,
-        "stream_dedup": q_stream_dedup,
         "stream_bin_counts": q_stream_bin_counts,
-        "tpch_q1": q_tpch_q1,
-        "revenue_by_nation": q_revenue_by_nation,
     }
 
 
@@ -1087,200 +915,6 @@ JOIN firsts f USING (source)
 """
 
 
-def _minhash_sql() -> str:
-    n_hashes, bands = 32, 4
-    rows = n_hashes // bands
-    params = DD._hash_params(n_hashes)
-    p = DD.MERSENNE
-    sig_exprs = ",\n    ".join(
-        f"list_min(list_transform(toks, x -> ({a} * (x % {p}) + {b}) % {p})) AS h{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT _id, {i} AS band, "
-        + " || ',' || ".join(f"h{i * rows + j}::VARCHAR" for j in range(rows))
-        + " AS bkey FROM sig"
-        for i in range(bands)
-    )
-    return f"""
-WITH toks AS (
-  SELECT doc_id AS _id,
-         list_distinct(list_transform(list_filter(string_split(text, ' '), w -> w <> ''),
-             w -> ('0x' || substr(md5(w), 1, 15))::BIGINT)) AS toks
-  FROM documents
-  WHERE len(list_filter(string_split(text, ' '), w -> w <> '')) > 0
-),
-sig AS (SELECT _id, {sig_exprs} FROM toks),
-banded AS ({band_rows})
-SELECT DISTINCT a._id AS id_a, b._id AS id_b
-FROM banded a JOIN banded b USING (band, bkey)
-WHERE a._id < b._id
-"""
-
-
-def _ngram_lsh_sql() -> str:
-    """DuckDB twin of ngram_jaccard_lsh_pairs: same shingle keys (polynomial
-    fold), same minhash family, same banded candidates, same Jaccard —
-    any engine divergence anywhere in the composition hash-mismatches."""
-    n_hashes, bands, base = 32, 4, 1_000_003
-    rows = n_hashes // bands
-    params = DD._hash_params(n_hashes)
-    p = DD.MERSENNE
-    sig_exprs = ",\n    ".join(
-        f"list_min(list_transform(shk, x -> ({a} * (x % {p}) + {b}) % {p})) AS h{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT _id, {i} AS band, "
-        + " || ',' || ".join(f"h{i * rows + j}::VARCHAR" for j in range(rows))
-        + " AS bkey FROM sig"
-        for i in range(bands)
-    )
-
-    def key(lst: str) -> str:
-        return (
-            f"list_reduce(list_prepend(0::BIGINT, list_transform({lst}, x -> x % {p})), "
-            f"(acc, x) -> (acc * {base} + x) % {p})"
-        )
-
-    return f"""
-WITH t AS ({{_WORD_TOKS}}),
-shk AS (
-  SELECT doc_id AS _id,
-    list_distinct(CASE WHEN len(tokens) >= 3
-      THEN list_transform(range(1, len(tokens) - 1), i -> {key('tokens[i:i+2]')})
-      ELSE [{key('tokens')}] END) AS shk
-  FROM t WHERE len(tokens) > 0
-),
-sig AS (SELECT _id, {sig_exprs} FROM shk),
-banded AS ({band_rows}),
-cand AS (SELECT DISTINCT a._id AS id_a, b._id AS id_b
-         FROM banded a JOIN banded b USING (band, bkey) WHERE a._id < b._id),
-j AS (
-  SELECT id_a, id_b,
-    len(list_intersect(x.shk, y.shk))::DOUBLE
-      / (len(x.shk) + len(y.shk) - len(list_intersect(x.shk, y.shk))) AS jaccard
-  FROM cand JOIN shk x ON x._id = cand.id_a JOIN shk y ON y._id = cand.id_b
-)
-SELECT id_a, id_b, round(jaccard, {{EMB_ROUND}}) AS jaccard FROM j WHERE jaccard >= 0.2
-""".format(_WORD_TOKS=_WORD_TOKS, EMB_ROUND=EMB_ROUND)
-
-
-_WORD_TOKS = """
-SELECT doc_id, lang, source,
-       list_transform(list_filter(string_split(text, ' '), w -> w <> ''),
-           w -> ('0x' || substr(md5(w), 1, 15))::BIGINT) AS tokens
-FROM documents
-"""
-
-
-def _corpus_prep_sql() -> str:
-    """DuckDB twin of plans/corpus_prep.corpus_prep: same rounded quality
-    gate, same md5 exact-dedup keep-min-id, same 32x4 banded MinHash over
-    md5-word tokens of the survivors, same exact-Jaccard >=0.8
-    verification on candidate pairs, same greedy drop-larger-id policy."""
-    n_hashes, bands = 32, 4
-    rows = n_hashes // bands
-    params = DD._hash_params(n_hashes)
-    p = DD.MERSENNE
-    sig_exprs = ",\n    ".join(
-        f"list_min(list_transform(toks, x -> ({a} * (x % {p}) + {b}) % {p})) AS h{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT _id, {i} AS band, "
-        + " || ',' || ".join(f"h{i * rows + j}::VARCHAR" for j in range(rows))
-        + " AS bkey FROM sig"
-        for i in range(bands)
-    )
-    return f"""
-WITH ts AS ({_text_stats_sql()}),
-g AS (
-  SELECT d.doc_id, d.source, d.lang, d.text, ts.n_words, ts.quality
-  FROM documents d JOIN ts USING (doc_id)
-  WHERE ts.quality >= 0.3 AND ts.n_words >= 5
-),
-keep AS (SELECT md5(text) AS ck, min(doc_id) AS doc_id FROM g GROUP BY 1),
-u AS (SELECT g.* FROM g JOIN keep ON md5(g.text) = keep.ck AND g.doc_id = keep.doc_id),
-toks AS (
-  SELECT doc_id AS _id,
-         list_distinct(list_transform(list_filter(string_split(text, ' '), w -> w <> ''),
-             w -> ('0x' || substr(md5(w), 1, 15))::BIGINT)) AS toks
-  FROM u
-  WHERE len(list_filter(string_split(text, ' '), w -> w <> '')) > 0
-),
-sig AS (SELECT _id, {sig_exprs} FROM toks),
-banded AS ({band_rows}),
-pairs AS (SELECT DISTINCT a._id AS id_a, b._id AS id_b
-          FROM banded a JOIN banded b USING (band, bkey) WHERE a._id < b._id),
-vpairs AS (
-  SELECT id_a, id_b
-  FROM pairs p
-  JOIN toks a ON a._id = p.id_a
-  JOIN toks b ON b._id = p.id_b
-  WHERE len(list_intersect(a.toks, b.toks))::DOUBLE
-        / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))
-        >= 0.8
-),
-drops AS (SELECT DISTINCT id_b AS doc_id FROM vpairs)
-SELECT u.doc_id, u.source, u.lang, u.n_words, u.quality
-FROM u ANTI JOIN drops USING (doc_id)
-"""
-
-
-def _text_stats_sql() -> str:
-    sw = ", ".join(f"'{s}'" for s in TX.STOPWORDS)
-    base = TX.FP_BASE
-    mod = TX.FP_MOD
-    lang_cases = []
-    for lang, markers in sorted(TX.LANG_MARKERS.items()):
-        mk = ", ".join(f"'{m}'" for m in markers)
-        lang_cases.append(
-            f"len(list_filter(w64, x -> x IN ({mk}))) AS hits_{lang}"
-        )
-    # mirror of functions/text.lang_guess fold (later langs win ties only if strictly greater)
-    guess = "'und'"
-    best = "0"
-    for lang in sorted(TX.LANG_MARKERS):
-        guess = f"CASE WHEN hits_{lang} > {best} THEN '{lang}' ELSE {guess} END"
-        best = f"greatest({best}, hits_{lang})"
-    return f"""
-WITH w AS (
-  SELECT doc_id, text,
-         list_filter(string_split(text, ' '), x -> x <> '') AS words,
-         list_filter(string_split(lower(text), ' '), x -> x <> '') AS lwords
-  FROM documents
-),
-w2 AS (
-  SELECT *, words[1:64] AS _unused, lwords[1:64] AS w64,
-    len(words) AS n_words,
-    list_reduce(list_prepend(0::BIGINT, list_transform(words, x -> greatest(1, ceil(length(x) / 4.0))::BIGINT)), (acc, x) -> acc + x) AS n_subtokens,
-    CASE WHEN len(lwords) > 0
-         THEN len(list_filter(lwords, x -> x IN ({sw}))) / len(lwords)
-         ELSE 0.0 END AS stopword_ratio_raw,
-    CASE WHEN length(text) > 0
-         THEN (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))) / length(text)
-         ELSE 0.0 END AS punct_ratio_raw,
-    list_reduce(list_prepend(0::BIGINT, list_transform(words, x ->
-        (length(x) * 131 + coalesce(ascii(x[1]), 0))::BIGINT)),
-        (acc, x) -> (acc * {base} + x) % {mod}) AS fp_almost
-  FROM w
-),
-w3 AS (
-  SELECT *, {", ".join(lang_cases)}
-  FROM w2
-)
-SELECT doc_id, n_words, n_subtokens,
-  round(stopword_ratio_raw, {EMB_ROUND}) AS stopword_ratio,
-  round(punct_ratio_raw, {EMB_ROUND}) AS punct_ratio,
-  round((least(n_words / 50.0, 1.0) + least(stopword_ratio_raw * 5.0, 1.0)
-         + greatest(0.0, 1.0 - punct_ratio_raw * 4.0)) / 3.0, {EMB_ROUND}) AS quality,
-  {guess} AS lang_guess,
-  fp_almost AS fingerprint
-FROM w3
-"""
-
-
 _IV_SQL = """
 SELECT source,
        min(timestamp2) + (max(timestamp2) - min(timestamp2)) // 3 AS start_ts,
@@ -1394,12 +1028,9 @@ SELECT bin, count(*) AS n_events,
   max(value) AS max_value
 FROM e GROUP BY bin ORDER BY bin
 """
-    # streaming twins: the deterministic projections of q_stream_dedup /
-    # q_stream_bin_counts (dedup = distinct content-key set; bins = epoch-
-    # aligned tumbling windows, Spark's window() origin is 1970-01-01 UTC)
-    sqls["stream_dedup"] = """
-SELECT DISTINCT md5(text) AS content_key FROM documents ORDER BY content_key
-"""
+    # streaming twin: the deterministic projection of q_stream_bin_counts
+    # (epoch-aligned tumbling windows; Spark's window() origin is
+    # 1970-01-01 UTC)
     sqls["stream_bin_counts"] = f"""
 SELECT (floor(epoch(ts))::BIGINT // {BIN_S}) * {BIN_S} AS bin_start,
   count(*) AS n_events,
@@ -1627,41 +1258,6 @@ FROM binz GROUP BY 1, 2
         for mode, sql_fn in (("exact", _rare_bins_sql), ("block", _rare_block_sql))
         for w in (1, 5)
     )
-    sqls["dedup_exact"] = """
-SELECT md5(text) AS content_key, min(doc_id) AS keep_id, count(*) AS n_copies
-FROM documents GROUP BY 1
-"""
-    sqls["minhash_lsh"] = _minhash_sql()
-    sqls["ngram_jaccard"] = f"""
-WITH t AS ({_WORD_TOKS}),
-sh AS (
-  SELECT source, lang, doc_id AS _id,
-    list_distinct(CASE WHEN len(tokens) >= 3
-      THEN list_transform(range(1, len(tokens) - 1),
-                          i -> array_to_string(tokens[i:i+2], '-'))
-      ELSE [array_to_string(tokens, '-')] END) AS sh
-  FROM t WHERE len(tokens) >= 3
-)
-SELECT a._id AS id_a, b._id AS id_b,
-  len(list_intersect(a.sh, b.sh)) / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-FROM sh a JOIN sh b USING (source, lang)
-WHERE a._id < b._id
-  AND len(list_intersect(a.sh, b.sh)) / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.2
-"""
-    sqls["ngram_jaccard_lsh"] = _ngram_lsh_sql()
-    a, b = DD._hash_params(1)[0]
-    p = DD.MERSENNE
-    bit_sum = " + ".join(
-        f"CASE WHEN list_sum(list_transform(h, v -> CASE WHEN (v // {1 << i}) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN {1 << i} ELSE 0 END"
-        for i in range(31)
-    )
-    sqls["simhash"] = f"""
-WITH t AS ({_WORD_TOKS}),
-h AS (SELECT doc_id, list_transform(tokens, x -> ({a} * (x % {p}) + {b}) % {p}) AS h FROM t)
-SELECT doc_id, (CASE WHEN len(h) = 0 THEN 0 ELSE {bit_sum} END)::BIGINT AS simhash FROM h
-"""
-    sqls["text_stats"] = _text_stats_sql()
-    sqls["corpus_prep"] = _corpus_prep_sql()
     sqls["cosine_topk"] = f"""
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
 SELECT vec_id,
@@ -1773,24 +1369,5 @@ FROM emb e JOIN asg ON asg.vec_id = e.vec_id, q
 WHERE e.vec_id <> 2 AND asg.cid IN (SELECT cid FROM probes)
 ORDER BY {_cosd('e.v', 'q.qv')} DESC, e.vec_id
 LIMIT 10
-"""
-    sqls["tpch_q1"] = f"""
-SELECT l_returnflag, l_linestatus,
-  sum(round(l_quantity)::BIGINT)::BIGINT AS sum_qty,
-  sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS sum_base_price_cents,
-  sum(round(l_extendedprice * (1 - l_discount) * 10000)::BIGINT)::BIGINT AS sum_disc_price_e4,
-  round(avg(round(l_quantity)::BIGINT), {EMB_ROUND}) AS avg_qty,
-  count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-    sqls["revenue_by_nation"] = """
-SELECT n_name, sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS revenue_cents, count(*) AS n_orders
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name ORDER BY n_name
 """
     return sqls

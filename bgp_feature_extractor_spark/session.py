@@ -1,8 +1,10 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode defaults target the sandbox (local[32], 128 GiB); on a real
-cluster every config here remains valid — shuffle partitions should be
-raised to ~2-3x total cores and AQE re-coalesces at runtime.
+Local-mode defaults fit the host: one task thread per core this process may
+run on, and a driver heap of an eighth of physical memory (1-8 GiB). On a
+real cluster every config here remains valid — shuffle partitions should be
+raised to ~2-3x total cores and AQE re-coalesces at runtime; ship the
+package with ``--py-files`` (scripts/run_submit.sh).
 """
 
 from __future__ import annotations
@@ -11,6 +13,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the package: the Python workers put it on their
+# path, so the Arrow UDFs import the engine wherever the driver started
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _default_heap() -> str:
+    """An eighth of MemTotal, clamped to [1 GiB, 8 GiB]: in local mode the
+    driver heap is the executor heap, and the rest of the host stays with
+    the Python workers, the page cache and other tenants."""
+    with open("/proc/meminfo") as f:
+        total_mb = next(int(line.split()[1]) // 1024 for line in f if line.startswith("MemTotal:"))
+    return f"{max(1024, min(8192, total_mb // 8))}m"
+
 
 def get_spark(
     app_name: str = "bgp_feature_extractor_spark",
@@ -18,9 +33,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    cpus = len(os.sched_getaffinity(0))
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', cpus)}]"
     cores = master[len("local[") : -1] if master.startswith("local[") else "32"
-    n = os.cpu_count() or 32 if cores == "*" else int(cores)
+    n = cpus if cores == "*" else int(cores)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -43,9 +59,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode: the driver heap IS the executor heap — size it for the
-        # thread count (32 tasks x wide hash-agg state thrash an 8g heap)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap())
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

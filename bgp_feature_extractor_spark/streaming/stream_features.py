@@ -192,59 +192,3 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
     q.stop()
     return rows
 
-
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-        T.StructField("event_ts", T.TimestampType()),
-    ]
-)
-
-
-def read_document_stream(spark: SparkSession, path: str) -> DataFrame:
-    """documents.parquet as a micro-batched stream; event_ts synthesized
-    from doc_id when the table has no ingestion timestamp (tests)."""
-    df = (
-        spark.readStream.schema(T.StructType(DOC_SCHEMA.fields[:-1]))
-        .option("maxFilesPerTrigger", 8)
-        .parquet(path)
-    )
-    return df.withColumn("event_ts", F.timestamp_seconds(F.col("doc_id")))
-
-
-def stream_dedup_exact(
-    docs: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming exact dedup — the ingestion-time twin of
-    operators/dedup.dedup_exact: dropDuplicates on the content hash with a
-    watermark bounding the state store (content keys older than the
-    watermark are evicted; a late duplicate past it would re-emit, which is
-    the standard streaming-dedup contract). State is keyed by the 128-bit
-    md5, not the raw text, so the store size is O(distinct keys in window),
-    independent of document length."""
-    keyed = docs.withColumn("content_key", F.md5(F.col("text")))
-    return (
-        keyed.withWatermark("event_ts", watermark)
-        .dropDuplicates(["content_key"])
-        .select("content_key", F.col("doc_id").alias("keep_id"), "source", "lang")
-    )
-
-
-def stream_text_stats(docs: DataFrame) -> DataFrame:
-    """Streaming twin of the text_stats scan: stateless per-row column
-    expressions (token counts / quality / language id / fingerprint run
-    unchanged on a stream — pure JVM projections need no state)."""
-    from bgp_feature_extractor_spark.functions import text as TX
-
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        TX.token_count(t).cast("long").alias("n_words"),
-        TX.quality_score(t).alias("quality"),
-        TX.lang_guess(t).alias("lang_guess"),
-        TX.fingerprint(t).alias("fingerprint"),
-    )

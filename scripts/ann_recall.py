@@ -11,8 +11,8 @@ ground truth for:
   * ann_lsh_topk_indexed, probes in {1, 3, 5}   (multi-probe knob)
   * ann_ivf_topk, n_probes in {1, 2, 4}, refined vs unrefined centroids
 
-Usage: python scripts/ann_recall.py   (prints a markdown table; paste into
-PLANS.md). tests/test_ann_recall.py runs a reduced grid of the same
+Usage: python scripts/ann_recall.py   (prints a markdown table).
+tests/test_ann_recall.py runs a reduced grid of the same
 measurement and asserts refined >= unrefined and probes=3 >= probes=1.
 """
 from __future__ import annotations

@@ -24,13 +24,8 @@ PLAN_QUERIES = [
     "rolling",
     "sessionize",
     "interval_label",
-    "dedup_exact",
-    "minhash_lsh",
-    "corpus_prep",
     "cosine_topk",
     "embedding_near_dup",
-    "tpch_q1",
-    "revenue_by_nation",
     "multi_width_labeled",
     "multi_width_rare",
 ]
@@ -66,32 +61,22 @@ def main() -> None:
         with redirect_stdout(buf):
             df.explain("formatted")
         out.append(f"## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
-    out.append(_pruning_sections(spark, sf_dir))
-    # hand-maintained sections (e.g. the ANN RECALL table) live in
-    # PLANS_APPENDIX.md so regeneration cannot drop them
-    appendix = os.path.join(os.path.dirname(__file__), "..", "PLANS_APPENDIX.md")
-    if os.path.exists(appendix):
-        out.append(open(appendix).read())
+    out.append(_pruning_section(spark, sf_dir))
     with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 
 
-def _pruning_sections(spark, sf_dir: str) -> str:
-    """S1 + ANN-index evidence: write the (source, day)-partitioned event
-    layout and the bucket-partitioned ANN table into a scratch dir, scan
-    with partition predicates, and show the PartitionFilters lines — the
-    file-listing-level prune that dominates at 100TB."""
+def _pruning_section(spark, sf_dir: str) -> str:
+    """S1 evidence: write the (source, day)-partitioned event layout into a
+    temporary directory, scan it with a source predicate, and show the
+    PartitionFilters line — the file-listing-level prune that dominates at
+    100TB."""
+    import re
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
     import __spark_entry__ as entrymod
-    from bgp_feature_extractor_spark.operators.similarity import (
-        ann_lsh_topk_indexed,
-        write_ann_index,
-    )
     from bgp_feature_extractor_spark.sources.partitioned import (
         read_events_pruned,
         write_partitioned_events,
@@ -100,48 +85,29 @@ def _pruning_sections(spark, sf_dir: str) -> str:
     tmp = tempfile.mkdtemp(prefix="spark_graft_plans_")
     try:
         ev = entrymod._doc_events(spark, sf_dir)
-        p1 = f"{tmp}/events_part"
-        write_partitioned_events(ev, p1)
+        path = f"{tmp}/events_part"
+        write_partitioned_events(ev, path)
         pruned = read_events_pruned(
-            spark, p1, sources=[ev.select("source").first()[0]]
+            spark, path, sources=[ev.select("source").first()[0]]
         )
-        plan1 = pruned._jdf.queryExecution().executedPlan().toString()
-
-        emb = entrymod._t(spark, sf_dir, "embeddings")
-        p2 = f"{tmp}/ann_index"
-        write_ann_index(emb, p2, n_planes=8)
-        q = [
-            r[0]
-            for r in emb.filter(F.col("vec_id") == 2)
-            .select(F.explode("embedding"))
-            .collect()
-        ]
-        idx = ann_lsh_topk_indexed(spark, p2, q, k=10, n_planes=8, exclude_id=2)
-        plan2 = idx._jdf.queryExecution().executedPlan().toString()
-
-        def scan_lines(plan: str) -> str:
-            import re
-
-            keep = []
-            for line in plan.splitlines():
-                if "Scan parquet" not in line and "FileScan" not in line:
-                    continue
-                for key in ("PartitionFilters", "PushedFilters", "ReadSchema"):
-                    m = re.search(rf"{key}: (\[[^\]]*\]|\S+)", line)
-                    if m:
-                        keep.append(f"{key}: {m.group(1)[:160]}")
-            return "\n".join(keep) or "(no scan nodes found)"
-
-        return (
-            "## partition pruning (S1: (source, day)-partitioned events; "
-            "ANN write-time bucket index)\n\n"
-            "Scan-relevant lines only — `PartitionFilters` non-empty means the\n"
-            "predicate prunes at the FILE LISTING, before any IO:\n\n"
-            "### events, source predicate\n\n```\n" + scan_lines(plan1) + "\n```\n\n"
-            "### ANN index, driver-computed bucket predicate\n\n```\n" + scan_lines(plan2) + "\n```\n"
-        )
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+    keep = []
+    for line in plan.splitlines():
+        if "Scan parquet" not in line and "FileScan" not in line:
+            continue
+        for key in ("PartitionFilters", "PushedFilters", "ReadSchema"):
+            m = re.search(rf"{key}: (\[[^\]]*\]|\S+)", line)
+            if m:
+                keep.append(f"{key}: {m.group(1)[:160]}")
+    return (
+        "## partition pruning (S1: (source, day)-partitioned events)\n\n"
+        "Scan-relevant lines only — `PartitionFilters` non-empty means the\n"
+        "predicate prunes at the FILE LISTING, before any IO:\n\n"
+        "```\n" + ("\n".join(keep) or "(no scan nodes found)") + "\n```\n"
+    )
 
 
 if __name__ == "__main__":

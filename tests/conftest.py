@@ -34,9 +34,9 @@ SNAPSHOT_SCHEMA = T.StructType(
 
 @pytest.fixture(scope="session")
 def spark():
-    # Test inputs are small: a bounded heap keeps the one test JVM from
-    # growing toward get_spark's 48g default, past a small host's memory
-    # (where the JVM is killed and every later test loses its session).
+    # Test inputs are small: one fixed 4g heap gives the suite's JVM the same
+    # size on every host, within a small host's memory (where a killed JVM
+    # costs every later test its session).
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g")
     s = get_spark(
         app_name="engine-tests",

@@ -4,7 +4,7 @@ The multi-probe LSH knob and refine=True IVF training exist to buy recall;
 this asserts they actually do, on the adversarial blob fixture from
 scripts/ann_recall.py (first-C ids all in one blob => unrefined IVF
 seeding is worst-case). The full {1,3,5}x{1,2,4} grid lives in
-scripts/ann_recall.py (RECALL table in PLANS.md); the test runs a reduced
+scripts/ann_recall.py (it prints the recall table); the test runs a reduced
 grid through the SAME measurement path.
 """
 

@@ -15,18 +15,7 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")
@@ -62,9 +51,7 @@ def test_query_matches_oracle(spark, ddb, name):
     q = entrymod.queries()[name]
     got = q(spark, SF_DIR).toPandas()
     sql = entrymod.oracle_sql().get(name)
-    if sql is None:
-        assert len(got) >= 0  # rows-only check
-        return
+    assert sql is not None, f"{name} has no DuckDB twin in oracle_sql()"
     want = ddb.sql(sql).df()
     assert sorted(got.columns) == sorted(want.columns), (
         f"{name} columns {sorted(got.columns)} != {sorted(want.columns)}"

@@ -1,6 +1,7 @@
 """Plan-shape regression tests: the physical plans we rely on at 100TB
 (pushdown, pruning, no accidental cartesian joins) must not silently
-degrade when operators change. Complements PLANS.md (human review)."""
+degrade when operators change. Complements the plan dumps that
+scripts/explain_plans.py writes for human review."""
 
 from __future__ import annotations
 
@@ -216,22 +217,36 @@ def test_rare_exact_plan_uses_packed_exchange(spark, events_parquet):
     assert "rangepartitioning(source" not in plan
 
 
+def _persisted_ids(spark) -> set:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return set(jmap.keySet().toArray())
+
+
 def test_materialized_frees_all_caches(spark):
     """The real zero-residual-persistence check behind ``_materialized``
-    (VERDICT r5 #2): after a cache-using declared query returns and its
+    (VERDICT r5 #2): after each cache-using declared query returns and its
     result frame is unpersisted, no persistent RDD introduced by the query
     may remain in the session. Asserted as set-difference against the
     pre-query persisted ids so the check is order-independent under the
     session-scoped fixture."""
     import __spark_entry__ as entrymod
 
-    def persisted_ids():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {k for k in jmap.keySet().toArray()}
+    for name in ("multi_width", "multi_width_labeled", "multi_width_rare"):
+        before = _persisted_ids(spark)
+        out = entrymod.queries()[name](spark, "/root/testdata/sf0.001")
+        out.count()
+        out.unpersist()
+        leaked = _persisted_ids(spark) - before
+        assert leaked == set(), f"persistent RDDs leaked by {name}: {leaked}"
 
-    before = persisted_ids()
-    out = entrymod.queries()["minhash_lsh"](spark, "/root/testdata/sf0.001")
-    out.count()
-    out.unpersist()
-    leaked = persisted_ids() - before
-    assert leaked == set(), f"persistent RDDs leaked by minhash_lsh: {leaked}"
+
+def test_materialized_probe_sees_a_leak(spark):
+    """Negative control for the probe above: a frame persisted and never
+    unpersisted must show up as a leaked persistent RDD."""
+    before = _persisted_ids(spark)
+    df = spark.range(10).persist()
+    df.count()
+    try:
+        assert _persisted_ids(spark) - before, "probe missed a persisted frame"
+    finally:
+        df.unpersist()

@@ -6,73 +6,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from bgp_feature_extractor_spark.operators import dedup as DD
-
-
-def _docs(spark):
-    """Tiny corpus with real duplicate multiplicity (the hot-group case the
-    signature collapse targets): 12 distinct token streams x 4 copies."""
-    rows = []
-    did = 0
-    for base in range(12):
-        toks = [((base * 131 + i * 7919) % 997) for i in range(30 + base)]
-        for _ in range(4):
-            rows.append((did, toks))
-            did += 1
-    return spark.createDataFrame(rows, "doc_id long, tokens array<long>")
-
-
-def test_banded_candidates_collapse_equivalence(spark):
-    """collapse=True (identical-signature grouping + expansion) must emit
-    exactly the same pair set as the plain band join + distinct."""
-    d = _docs(spark)
-    plain = DD.minhash_lsh_pairs(
-        d, "doc_id", "tokens", n_hashes=16, bands=4, collapse=False
-    )
-    collapsed = DD.minhash_lsh_pairs(
-        d, "doc_id", "tokens", n_hashes=16, bands=4, collapse=True
-    )
-    p = {(r["id_a"], r["id_b"]) for r in plain.collect()}
-    c_rows = collapsed.collect()
-    c = {(r["id_a"], r["id_b"]) for r in c_rows}
-    assert p == c
-    # the collapsed plan must emit each pair exactly once (no distinct)
-    assert len(c_rows) == len(c)
-    # duplicates exist in the fixture, so within-group pairs are exercised
-    assert len(c) >= 12 * 6  # each 4-copy group contributes C(4,2)=6 pairs
-
-
-def test_ngram_jaccard_union_arithmetic(spark):
-    """|A∪B| = |A|+|B|-|A∩B| must reproduce array_union sizes (and the
-    jaccard doubles) for distinct shingle sets."""
-    d = spark.createDataFrame(
-        [(i, "g", [j % 13 for j in range(i, i + 9)]) for i in range(8)],
-        "doc_id long, grp string, tokens array<long>",
-    )
-    out = DD.ngram_jaccard_pairs(d, "doc_id", "tokens", ["grp"], n=3, threshold=0.01)
-    sh = d.select(
-        "grp",
-        F.col("doc_id").alias("_id"),
-        F.array_distinct(DD.ngram_shingles(F.col("tokens"), 3)).alias("sh"),
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    ref = (
-        a.join(b, ["grp"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            (
-                F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-                / F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.01)
-    )
-    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
-    want = {(r["id_a"], r["id_b"]): r["jaccard"] for r in ref.collect()}
-    assert got == want  # exact double equality, not approx
-
 
 def test_with_bin_carried_anchor_fast_path(spark):
     """with_bin over a frame that already carries first_ts (the multi-width
