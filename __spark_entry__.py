@@ -50,10 +50,11 @@ def _doc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _materialized(out: DataFrame, caches: list[DataFrame]) -> DataFrame:
     """Persist + eagerly materialize ``out``, then free every intermediate
-    cache (VERDICT r4 #7: the correctness gate runs every query in ONE
-    session; without this the three multi-width queries accumulate their
-    persisted classify/editdist/rare frames for the whole session). The
-    only residual is the bounded result frame itself — callers that keep
+    cache the query made (VERDICT r4 #7: the correctness gate runs every
+    query in ONE session; ``multi_width_rare`` persists its two rare arms,
+    while ``multi_width_matrices`` persists nothing, so its ``caches`` are
+    freed as a no-op). The only residual is the bounded result frame
+    itself — callers that keep
     the session alive can ``.unpersist()`` the returned frame once
     consumed (tests/test_plan_quality.py::test_materialized_frees_all_caches
     asserts via ``getPersistentRDDs`` that zero query-introduced persistent
@@ -309,7 +310,7 @@ def q_multi_width_labeled(spark, sf_dir):
     """EP1 -> EP2 composed over ALL widths — the reference's production
     loop (label_csv.py:293-313: for each width, features -> fix_columns ->
     label -> ratios), driven from ONE shared classify/editdist/rare
-    computation (multi_width_matrices' persisted frames) instead of six
+    computation (multi_width_matrices' one plan) instead of six
     independent pipelines."""
     from bgp_feature_extractor_spark.operators.ratios import RATIO_DEFS
     from bgp_feature_extractor_spark.plans.feature_matrix import multi_width_matrices
@@ -324,11 +325,10 @@ def q_multi_width_labeled(spark, sf_dir):
     #
     # Measured dead end (r4): persisting the matrix union here (it feeds
     # both the interval derivation and the labeled join) does NOT help —
-    # the expensive stages already sit behind multi_width_matrices'
-    # internal caches, so the duplicated subtree is only the cheap
-    # re-bin/re-agg, and the extra count() barrier serializes work the
-    # optimizer otherwise overlaps (interleaved A/B at sf0.1: persist
-    # min 18.9 s vs single-pass min 10.6 s).
+    # the extra count() barrier serializes work the optimizer otherwise
+    # overlaps, and AQE reuses the matrix's exchanges between the two
+    # consumers (interleaved A/B at sf0.1: persist min 18.9 s vs
+    # single-pass min 10.6 s).
     caches: list[DataFrame] = []
     m = multi_width_matrices(
         _doc_events(spark, sf_dir), None, CFG, caches=caches
@@ -357,7 +357,7 @@ def q_multi_width_rare(spark, sf_dir):
     """The multi-width rare sharing, value-checked (VERDICT r3 #6): ONE
     per-event Q5 recurrence (rare_block=10 so the warm-up gate opens at
     the driver's SF) re-binned at widths {1, 5} — the exact frame
-    multi_width_matrices persists and re-bins internally.
+    multi_width_matrices re-bins internally.
 
     Second arm (VERDICT r4 #4): the SAME widths under rare_mode='block'
     (rare_shard_paths=10 so the fixture's ~20 paths per source span two

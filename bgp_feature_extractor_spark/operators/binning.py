@@ -50,8 +50,9 @@ def with_bin(
         df = df.drop("bin")
     if "first_ts" in df.columns:
         # anchor already carried on the rows (the feature-matrix plan joins
-        # it once, before any persist) — binning is a pure projection, no
-        # join per width (guide §2.4: remove shuffles/joins outright)
+        # it once, before the widths are exploded) — binning is a pure
+        # projection, no join per width (guide §2.4: remove shuffles/joins
+        # outright)
         joined = df
     else:
         joined = df.join(F.broadcast(firsts.select("source", "first_ts")), "source")

@@ -60,24 +60,20 @@ def pad_to_batch_size(
     order_col: str = "bin",
 ) -> DataFrame:
     """Repeat the last row until count % batch_size == 0
-    (label_csv.py:98-104), per partition group."""
+    (label_csv.py:98-104), per partition group.
+
+    One pass over ``df``: each group's last row carries its number of
+    copies and is exploded, so the input plan runs once (a union of the
+    rows with their pads would run it twice)."""
     w = Window.partitionBy(*partition_cols)
-    wo = Window.partitionBy(*partition_cols).orderBy(F.desc(order_col))
-    sized = df.withColumn("_n", F.count(F.lit(1)).over(w)).withColumn(
-        "_rn", F.row_number().over(wo)
-    )
-    pad = (
-        sized.filter(F.col("_rn") == 1)
-        .withColumn(
-            # Spark % keeps the dividend's sign, so use the explicit form
-            "_diff",
-            (F.lit(batch_size) - F.col("_n") % batch_size) % batch_size,
-        )
-        .filter(F.col("_diff") > 0)
-        .withColumn("_dup", F.explode(F.sequence(F.lit(1), F.col("_diff"))))
-        .drop("_dup", "_diff")
-    )
-    return sized.unionByName(pad).drop("_n", "_rn")
+    last = F.row_number().over(w.orderBy(F.desc(order_col))) == 1
+    # Spark % keeps the dividend's sign, so use the explicit form
+    short = (F.lit(batch_size) - F.count(F.lit(1)).over(w) % batch_size) % batch_size
+    sized = df.select("*", F.when(last, short).otherwise(0).alias("_copies"))
+    # a generator over window expressions in one select fails analysis
+    return sized.select(
+        "*", F.explode(F.sequence(F.lit(0), F.col("_copies"))).alias("_copy")
+    ).drop("_copies", "_copy")
 
 
 def randomized_clips(

@@ -25,14 +25,12 @@ def rolling_bin_stats(
         .orderBy(order_col)
         .rowsBetween(-k, -1)
     )
-    out = matrix
-    for c in value_cols:
-        out = (
-            out.withColumn(f"{c}_roll_mean", F.avg(c).over(w))
-            .withColumn(f"{c}_roll_std", F.stddev_samp(c).over(w))
-            .withColumn(f"{c}_roll_max", F.max(c).over(w))
-        )
-    return out
+    stats = (("mean", F.avg), ("std", F.stddev_samp), ("max", F.max))
+    # one select: each chained withColumn would re-analyse the whole plan
+    return matrix.select(
+        "*",
+        *[fn(c).over(w).alias(f"{c}_roll_{name}") for c in value_cols for name, fn in stats],
+    )
 
 
 def lag_lead(

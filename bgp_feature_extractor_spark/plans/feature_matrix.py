@@ -18,8 +18,6 @@ Physical shape (local[N] and cluster alike):
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,9 +49,8 @@ def feature_matrix(
 
     NOTE (plan-construction eagerness): with rare_mode 'exact' building the
     plan runs ONE eager Spark action — the tiny per-source stats aggregate
-    is collected driver-side to LPT-pack sources onto partitions. That
-    aggregate is cached and stays cached until the session ends (the
-    returned DataFrame is lazy, so this function cannot unpersist it)."""
+    is collected driver-side to LPT-pack sources onto partitions. Nothing
+    is persisted: the call leaves no cached frame behind."""
     cfg = cfg or EngineConfig()
     return multi_width_matrices(events, snapshot, cfg, widths=(cfg.minutes_window,)).drop(
         "minutes_window"
@@ -108,29 +105,29 @@ def multi_width_matrices(
     to independent per-width pipelines (per-group row sets are the
     per-width sets; asserted row-for-row in tests/test_r6_optimizations.py).
 
-    Persist note (more than one width only): ``classified+edit_dist`` and
-    the per-event rare counts are persisted and eagerly materialized (two
-    overlapped count() actions) so the width branches read the cache
-    instead of racing to recompute it inside one job. The returned
-    DataFrame is lazy, so this function cannot unpersist them itself; pass
-    ``caches`` (a list) to receive every persisted frame — ``[firsts,
-    classified+edit_dist, rare_events]`` — for caller-controlled
-    ``unpersist()`` once the result is consumed; otherwise they stay cached
-    until session end."""
+    Nothing is persisted and no barrier action runs: with the width as
+    data, the classified rows and the per-event rare counts each have ONE
+    consumer, so the returned plan computes them once per action, and the
+    per-source stats it reads in several places are one exchange that AQE
+    reuses. ``caches`` (a list), if given, receives the intermediate frames
+    ``[firsts, classified+edit_dist, rare_events]`` (no ``rare_events``
+    under rare_mode 'off'); none of them is persisted, so a caller's
+    ``unpersist()`` on them is a no-op."""
     cfg = cfg or EngineConfig()
     widths = tuple(int(w) for w in widths)
     rare_mode = resolve_rare_mode(cfg)  # an unknown mode fails before any work
-    # tiny (one row per source) but read by every branch (bin anchor, spine,
-    # rare packing) — cache so the events table is scanned once for it
-    firsts = first_ts_per_source(events).cache()
-    persisted = [firsts]
+    # tiny (one row per source) and read by every branch (bin anchor, spine,
+    # rare packing); 'exact' collects it once at plan build, and in the
+    # plan AQE reuses its one exchange, so it is not cached
+    firsts = first_ts_per_source(events)
     raw = events.select(*EVENT_COLS)
     # the rare branch reads the RAW events (cheap pruned re-scan), not the
     # classifier output — otherwise the classify window executes twice
     rare_events = _rare_events(rare_mode, raw, firsts, cfg)
 
     # carry the per-source bin anchor ON the rows (one broadcast join here,
-    # before any persist) so each width's with_bin is a pure projection
+    # before the widths are exploded) so each width's with_bin is a pure
+    # projection
     anchor = F.broadcast(firsts.select("source", "first_ts"))
     # edit distance runs while the data is still hash-partitioned by
     # (source, doc_id), so the Arrow UDF sees uniform partitions
@@ -141,21 +138,8 @@ def multi_width_matrices(
     )
     if rare_events is not None:
         rare_events = rare_events.join(anchor, "source")
-    if len(widths) > 1:
-        dist = dist.persist()
-        persisted.append(dist)
-        if rare_events is not None:
-            rare_events = rare_events.persist()
-            persisted.append(rare_events)
-        # materialization barriers for the shared caches, OVERLAPPED: the
-        # classify+editdist branch and the rare recurrence are independent
-        # jobs, so counting both from a 2-thread pool lets the rare
-        # kernel's hot-source task back-fill cores the classify stage's
-        # tail leaves idle (guide §2.6 "overlap independent jobs")
-        with ThreadPoolExecutor(max_workers=len(persisted) - 1) as pool:
-            list(pool.map(lambda d: d.count(), persisted[1:]))
     if caches is not None:
-        caches.extend(persisted)
+        caches.extend(f for f in (firsts, dist, rare_events) if f is not None)
 
     # Width is DATA, not a plan branch: every row is repeated once per width
     # and the whole matrix runs as ONE aggregation/join pipeline keyed by
@@ -163,11 +147,12 @@ def multi_width_matrices(
     # processes exactly the per-width row sets, so every aggregate
     # (including the order-dependent A5 fold over the array_sort'ed
     # collect_list and the exact distinct) is value-identical to per-width
-    # runs — with one read of each cache and one exchange per stage
-    # instead of one per width. The width stays an exploded column even
-    # when there is one: a literal would be folded out of some keys and not
-    # others, and each (1, source, bin) vs (source, bin) partitioning
-    # mismatch costs an exchange (measured: 24 jobs instead of 21).
+    # runs — with one computation of each shared frame and one exchange
+    # per stage instead of one per width. The width stays an exploded
+    # column even when there is one: a literal would be folded out of some
+    # keys and not others, and each (1, source, bin) vs (source, bin)
+    # partitioning mismatch costs an exchange (measured: 24 jobs instead of
+    # 21).
     width = F.explode(F.array(*[F.lit(w) for w in widths])).alias("minutes_window")
 
     def widen(df: DataFrame) -> DataFrame:

@@ -1,5 +1,5 @@
 """EP2 invariants not covered by the DuckDB oracle cross-checks:
-padding multiple, annotated 'mark' label, randomized clips."""
+padding multiple and pad rows, annotated 'mark' label, randomized clips."""
 
 from __future__ import annotations
 
@@ -33,6 +33,25 @@ def test_padding_multiple_of_32(spark, matrix_and_intervals):
     out = labeled_ratio_dataset(m, iv, CFG, pad=True)
     per = out.groupBy("source").count().collect()
     assert per and all(r["count"] % 32 == 0 for r in per)
+
+
+def test_padding_repeats_last_row_without_union(spark, matrix_and_intervals):
+    """Padding runs the input plan once (no self-union) and every pad row
+    is a copy of its group's max-bin row."""
+    m, iv = matrix_and_intervals
+    padded = labeled_ratio_dataset(m, iv, CFG, pad=True)
+    assert "Union" not in padded._jdf.queryExecution().executedPlan().toString()
+    got = padded.toPandas()
+    base = labeled_ratio_dataset(m, iv, CFG, pad=False).toPandas()
+    assert set(got["source"]) == set(base["source"])
+    for src, g in got.groupby("source"):
+        b = base[base["source"] == src]
+        assert len(g) % 32 == 0 and 0 <= len(g) - len(b) < 32
+        assert sorted(g["bin"].unique()) == sorted(b["bin"])
+        last = b.loc[b["bin"].idxmax()]
+        copies = g[g["bin"] == last["bin"]]
+        assert len(copies) == len(g) - len(b) + 1
+        assert all(row.equals(last) for _, row in copies.iterrows())
 
 
 def test_labels_only_inside_interval(spark, matrix_and_intervals):

@@ -6,7 +6,7 @@ the reference timescale set). The shared implementation computes them
 once; these tests pin (a) exact equality with independent per-width runs
 — including a fixture dense enough that the rare family is nonzero, so
 rare_bins_from_events is value-checked — and (b) the sharing itself
-(eager cache materialized at plan build; every width branch reads it).
+(each kernel is one node of the one plan, with nothing persisted).
 """
 
 from __future__ import annotations
@@ -70,28 +70,20 @@ def test_multi_width_rare_nonzero(mw):
     assert n > 0
 
 
+def _unexecuted_plan(df) -> str:
+    # taken before any action, so AQE has not yet rewritten the plan
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_multi_width_shares_classify(spark, dense_events):
-    mw = multi_width_matrices(dense_events, None, EngineConfig(), widths=WIDTHS)
-    # (a) plan build already materialized the shared frames (eager count()
-    # on the persisted classify+editdist and per-event rare DataFrames)
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    assert any(i.numCachedPartitions() > 0 for i in infos)
-    # (b) every width branch reads the cache: one InMemoryTableScan per
-    # width for the classified frame (plus one per width for rare events)
-    plan = mw._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 2 * len(WIDTHS)
-    # (c) the classify exchange/UDF must NOT appear outside the cached
-    # relation: strip InMemoryRelation subtree dumps, then no
-    # ArrowEvalPython (Levenshtein) node may remain live in any branch
-    live = "\n".join(
-        ln for ln in plan.splitlines() if "InMemoryRelation" not in ln
+    """The Levenshtein UDF (ArrowEvalPython) and the exact rare kernel
+    (MapInArrow) run ONCE for all widths: one node each in the plan, not
+    one per width."""
+    plan = _unexecuted_plan(
+        multi_width_matrices(dense_events, None, EngineConfig(), widths=WIDTHS)
     )
-    # the executed plan prints cached children under InMemoryRelation only;
-    # a live (re-executed) ArrowEvalPython would appear as a plan node line
-    # starting with +-/:- outside those dumps. Count conservatively: the
-    # cached dump repeats per scan, so require the live plan to contain no
-    # MORE ArrowEvalPython mentions than the cached dumps account for.
-    assert live.count("ArrowEvalPython") <= plan.count("InMemoryRelation")
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("MapInArrow") == 1
 
 
 def test_multi_width_block_mode_shares_rare(spark, dense_events):
@@ -99,8 +91,8 @@ def test_multi_width_block_mode_shares_rare(spark, dense_events):
     'auto' escalates to at the 10^12-row target) the salted rare kernel
     must run ONCE, not once per width. (a) values equal independent
     per-width block-mode runs; (b) the block kernels (two MapInArrow
-    passes + the threshold re-merge fold) appear only inside the cached
-    rare_events subtree — no live re-execution in any width branch."""
+    passes + the threshold re-merge fold) appear once each in the plan,
+    beside the one Levenshtein UDF."""
     # rare_shard_paths must be < paths/source or the fixture is one shard
     # per source and the frozen prior-shards-only thresholds are all 0
     cfg = dataclasses.replace(
@@ -108,6 +100,7 @@ def test_multi_width_block_mode_shares_rare(spark, dense_events):
     )
     caches: list = []
     mw = multi_width_matrices(dense_events, None, cfg, widths=WIDTHS, caches=caches)
+    plan = _unexecuted_plan(mw)
     got_all = mw.toPandas()
     for w in WIDTHS:
         want = _sorted(
@@ -121,14 +114,9 @@ def test_multi_width_block_mode_shares_rare(spark, dense_events):
         pd.testing.assert_frame_equal(got, want, check_dtype=True)
     # rare family must be exercised, or the sharing claim is vacuous
     assert (got_all["number_rare_ases"] > 0).any()
-    plan = mw._jdf.queryExecution().executedPlan().toString()
-    live = "\n".join(ln for ln in plan.splitlines() if "InMemoryRelation" not in ln)
-    # each cached-relation dump repeats the kernels once; a live (re-run)
-    # kernel would push the count past what the dumps account for
-    n_dumps = plan.count("InMemoryRelation")
-    assert live.count("MapInArrow") <= 2 * n_dumps
-    assert live.count("FlatMapGroupsInPandas") <= n_dumps
-    # ADVICE r3: persisted frames are surfaced for caller-controlled cleanup
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("MapInArrow") == 2
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    # the intermediate frames are still handed out, none of them persisted
     assert len(caches) == 3
-    for c in caches:
-        c.unpersist()
+    assert not any(c.is_cached for c in caches)

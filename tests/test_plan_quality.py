@@ -8,7 +8,10 @@ from __future__ import annotations
 import pytest
 
 from bgp_feature_extractor_spark.config import EngineConfig
-from bgp_feature_extractor_spark.plans.feature_matrix import feature_matrix
+from bgp_feature_extractor_spark.plans.feature_matrix import (
+    feature_matrix,
+    multi_width_matrices,
+)
 from bgp_feature_extractor_spark.sources.synth import synth_events
 
 
@@ -94,8 +97,6 @@ def test_unknown_rare_mode_rejected(events_parquet, mode):
     """An unknown rare_mode fails when the plan is built instead of
     silently zero-filling the rare family."""
     import dataclasses
-
-    from bgp_feature_extractor_spark.plans.feature_matrix import multi_width_matrices
 
     cfg = dataclasses.replace(EngineConfig(), rare_mode=mode)
     with pytest.raises(ValueError, match="rare_mode"):
@@ -220,6 +221,16 @@ def test_rare_exact_plan_uses_packed_exchange(spark, events_parquet):
 def _persisted_ids(spark) -> set:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return set(jmap.keySet().toArray())
+
+
+def test_plans_persist_nothing(spark, events_parquet):
+    """Neither plan builder leaves a persistent RDD behind after an action
+    (the 'exact' rare mode still collects the per-source stats at build)."""
+    for build in (feature_matrix, multi_width_matrices):
+        before = _persisted_ids(spark)
+        build(events_parquet, None, EngineConfig()).count()
+        leaked = _persisted_ids(spark) - before
+        assert leaked == set(), f"persistent RDDs left by {build.__name__}: {leaked}"
 
 
 def test_materialized_frees_all_caches(spark):
