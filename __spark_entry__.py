@@ -5,8 +5,7 @@ sf0.001. ``queries()`` exposes the paper's dataflow one stage at a time:
 event-time bins, pivots, windows and sessions, as-of classification, the
 feature matrix at one width and at the six reference widths, the rare-token
 recurrence, labels, ratios, padding, the CSV round trip and the streaming
-bin counts, plus the embedding cosine top-k, near-duplicate and ANN
-queries. ``oracle_sql()`` carries a DuckDB twin for every query. In the
+bin counts. ``oracle_sql()`` carries a DuckDB twin for every query. In the
 matrix queries the warm-up gate pins the rare columns to zero at the
 driver's scale factor, and their twins assert exactly that; ``rare_bins``
 and ``multi_width_rare`` lower the gate and check nonzero rare values.
@@ -21,7 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bgp_feature_extractor_spark.config import EngineConfig
-from bgp_feature_extractor_spark.operators import similarity as SIM
 from bgp_feature_extractor_spark.operators import windows as WIN
 from bgp_feature_extractor_spark.plans.feature_matrix import feature_matrix
 from bgp_feature_extractor_spark.sources.adapters import documents_to_events
@@ -31,7 +29,7 @@ RARE_COLS = ["number_rare_ases", "rare_ases_avg", "rare_ases_max"]
 ENTITIES = 50
 BIN_S = 300  # events-table bin width (seconds)
 GAP_S = 1800  # sessionization inactivity gap
-EMB_ROUND = 6
+ROUND_DIGITS = 6  # float columns are rounded so values hash stably
 
 
 
@@ -46,24 +44,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _doc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return documents_to_events(_t(spark, sf_dir, "documents"), entities=ENTITIES)
-
-
-def _materialized(out: DataFrame, caches: list[DataFrame]) -> DataFrame:
-    """Persist + eagerly materialize ``out``, then free every intermediate
-    cache the query made (VERDICT r4 #7: the correctness gate runs every
-    query in ONE session; ``multi_width_rare`` persists its two rare arms,
-    while ``multi_width_matrices`` persists nothing, so its ``caches`` are
-    freed as a no-op). The only residual is the bounded result frame
-    itself — callers that keep
-    the session alive can ``.unpersist()`` the returned frame once
-    consumed (tests/test_plan_quality.py::test_materialized_frees_all_caches
-    asserts via ``getPersistentRDDs`` that zero query-introduced persistent
-    RDDs remain after that)."""
-    out = out.persist()
-    out.count()
-    for c in caches:
-        c.unpersist()
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -146,7 +126,7 @@ def q_sessionize(spark, sf_dir):
         F.count(F.lit(1)).alias("n_sessions"),
         F.sum("n_events").alias("n_events"),
         F.max("duration_s").alias("max_duration_s"),
-        F.round(F.avg("duration_s"), EMB_ROUND).alias("avg_duration_s"),
+        F.round(F.avg("duration_s"), ROUND_DIGITS).alias("avg_duration_s"),
     )
 
 
@@ -163,7 +143,7 @@ def q_rolling(spark, sf_dir):
         "event_type",
         "bin",
         "n",
-        F.round("n_roll_mean", EMB_ROUND).alias("n_roll_mean"),
+        F.round("n_roll_mean", ROUND_DIGITS).alias("n_roll_mean"),
         F.col("n_roll_max").alias("n_roll_max"),
     )
 
@@ -194,7 +174,7 @@ def q_interval_label(spark, sf_dir):
     )
     return lab.groupBy("event_type", "label").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.avg(F.round(F.col("value") * 100).cast("long")), EMB_ROUND).alias(
+        F.round(F.avg(F.round(F.col("value") * 100).cast("long")), ROUND_DIGITS).alias(
             "avg_value_cents"
         ),
     )
@@ -256,7 +236,7 @@ def q_rare_bins(spark, sf_dir):
         "bin",
         "number_rare_ases",
         "rare_ases_max",
-        F.round("rare_ases_avg", EMB_ROUND).alias("rare_ases_avg"),
+        F.round("rare_ases_avg", ROUND_DIGITS).alias("rare_ases_avg"),
     )
 
 
@@ -286,7 +266,7 @@ def q_label_ratios(spark, sf_dir):
     out = labeled_ratio_dataset(m, _doc_intervals(m), CFG, pad=False)
     return out.select(
         *RATIO_OUT_COLS,
-        *[F.round(F.col(n), EMB_ROUND).alias(n) for n, _, _ in RATIO_DEFS],
+        *[F.round(F.col(n), ROUND_DIGITS).alias(n) for n, _, _ in RATIO_DEFS],
     )
 
 
@@ -298,12 +278,11 @@ def q_multi_width(spark, sf_dir):
     see plans/feature_matrix.multi_width_matrices."""
     from bgp_feature_extractor_spark.plans.feature_matrix import multi_width_matrices
 
-    caches: list[DataFrame] = []
-    m = multi_width_matrices(_doc_events(spark, sf_dir), None, CFG, caches=caches)
+    m = multi_width_matrices(_doc_events(spark, sf_dir), None, CFG)
     # RARE_COLS kept (VERDICT r4 nit #3): at driver SF every source is
     # below rare_block=1000, so the warm-up gate pins them to zero at
     # EVERY width — the oracle asserts exactly that gate per width.
-    return _materialized(m.drop("timestamp"), caches)
+    return m.drop("timestamp")
 
 
 def q_multi_width_labeled(spark, sf_dir):
@@ -329,10 +308,9 @@ def q_multi_width_labeled(spark, sf_dir):
     # overlaps, and AQE reuses the matrix's exchanges between the two
     # consumers (interleaved A/B at sf0.1: persist min 18.9 s vs
     # single-pass min 10.6 s).
-    caches: list[DataFrame] = []
-    m = multi_width_matrices(
-        _doc_events(spark, sf_dir), None, CFG, caches=caches
-    ).drop(*RARE_COLS, "timestamp")
+    m = multi_width_matrices(_doc_events(spark, sf_dir), None, CFG).drop(
+        *RARE_COLS, "timestamp"
+    )
     iv = m.groupBy("minutes_window", "source").agg(
         F.expr("min(timestamp2) + (max(timestamp2) - min(timestamp2)) div 3").alias(
             "start_ts"
@@ -345,12 +323,11 @@ def q_multi_width_labeled(spark, sf_dir):
     lab = labeled_ratio_dataset(
         m, iv, CFG, pad=False, keys=("minutes_window", "source")
     )
-    out = lab.select(
+    return lab.select(
         "minutes_window",
         *RATIO_OUT_COLS,
-        *[F.round(F.col(n), EMB_ROUND).alias(n) for n, _, _ in RATIO_DEFS],
+        *[F.round(F.col(n), ROUND_DIGITS).alias(n) for n, _, _ in RATIO_DEFS],
     )
-    return _materialized(out, caches)
 
 
 def q_multi_width_rare(spark, sf_dir):
@@ -377,26 +354,20 @@ def q_multi_width_rare(spark, sf_dir):
 
     ev = _doc_events(spark, sf_dir)
     cfg = dataclasses.replace(CFG, rare_block=10)
-    firsts = first_ts_per_source(ev).cache()
-    # first_ts carried on the persisted rows -> per-width re-bin is a pure
-    # projection (operators/binning.with_bin fast path); the two arms'
-    # barriers run as overlapped jobs (guide §2.6)
-    fsel = F.broadcast(firsts.select("source", "first_ts"))
+    # first_ts carried on each arm's rows -> the per-width re-bin is a pure
+    # projection; each arm has one consumer (the union), so nothing is
+    # persisted
+    fsel = F.broadcast(first_ts_per_source(ev).select("source", "first_ts"))
     arms = [
-        ("exact", rare_events_stream(ev, cfg).join(fsel, "source").persist()),
+        ("exact", rare_events_stream(ev, cfg).join(fsel, "source")),
         (
             "block",
             rare_events_block(ev, dataclasses.replace(cfg, rare_shard_paths=10))
-            .join(fsel, "source")
-            .persist(),
+            .join(fsel, "source"),
         ),
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(lambda a: a[1].count(), arms))
     # mode AND width are data, not plan branches: one union of the two
-    # persisted arms (mode column), widths exploded, ONE groupBy over
+    # arms (mode column), widths exploded, ONE groupBy over
     # (rare_mode, minutes_window, source, bin) — value-identical to the
     # former 4-branch union (per-group row sets are exactly the per-arm
     # per-width sets) with ~1/4 the stages
@@ -415,15 +386,11 @@ def q_multi_width_rare(spark, sf_dir):
         ((F.col("ts") - F.col("first_ts")) / bsz).cast("long").alias("bin"),
         "rare",
     )
-    out = (
-        binned.groupBy("rare_mode", "minutes_window", "source", "bin")
-        .agg(
-            F.sum("rare").alias("number_rare_ases"),
-            F.max("rare").alias("rare_ases_max"),
-            F.round(F.avg("rare"), EMB_ROUND).alias("rare_ases_avg"),
-        )
+    return binned.groupBy("rare_mode", "minutes_window", "source", "bin").agg(
+        F.sum("rare").alias("number_rare_ases"),
+        F.max("rare").alias("rare_ases_max"),
+        F.round(F.avg("rare"), ROUND_DIGITS).alias("rare_ases_avg"),
     )
-    return _materialized(out, [firsts, *(rev for _, rev in arms)])
 
 
 def q_csv_round_trip(spark, sf_dir):
@@ -448,7 +415,7 @@ def q_csv_round_trip(spark, sf_dir):
         out = labeled_ratio_dataset(m, _doc_intervals(m), CFG, pad=False)
         rows = out.select(
             *RATIO_OUT_COLS,
-            *[F.round(F.col(n), EMB_ROUND).alias(n) for n, _, _ in RATIO_DEFS],
+            *[F.round(F.col(n), ROUND_DIGITS).alias(n) for n, _, _ in RATIO_DEFS],
         )
         # materialize before the temp CSV disappears
         return spark.createDataFrame(rows.toPandas(), rows.schema)
@@ -490,116 +457,12 @@ def q_before_during_after(spark, sf_dir):
     return a.select(
         "source",
         F.col("column").alias("feature"),
-        *[F.round(F.col(c), EMB_ROUND).alias(c) for c in stats],
+        *[F.round(F.col(c), ROUND_DIGITS).alias(c) for c in stats],
         "mean_verdict_before",
         "mean_verdict_after",
         "median_verdict_before",
         "median_verdict_after",
     )
-
-
-def q_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-10 against the vec_id=0 embedding."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = [r[0] for r in emb.filter(F.col("vec_id") == 0).select(F.explode("embedding")).collect()]
-    top = SIM.cosine_topk(emb.filter(F.col("vec_id") != 0), q, k=10)
-    return top.select("vec_id", F.round("cosine", EMB_ROUND).alias("cosine"))
-
-
-def q_embedding_near_dup(spark, sf_dir):
-    """LSH-blocked embedding-cosine near-duplicate pairs (threshold tuned
-    to the synthetic embedding distribution at small SF)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    nd = SIM.embedding_near_dup(emb, threshold=0.3, n_planes=8)
-    return nd.select("id_a", "id_b", F.round("cosine", EMB_ROUND).alias("cosine"))
-
-
-def q_ann_lsh(spark, sf_dir):
-    """Approximate NN: hyperplane-LSH bucket prune, exact cosine re-rank.
-    Query anchor vec_id=2 lands in a populated bucket at every SF."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = [r[0] for r in emb.filter(F.col("vec_id") == 2).select(F.explode("embedding")).collect()]
-    top = SIM.ann_lsh_topk(emb.filter(F.col("vec_id") != 2), q, k=10, n_planes=8)
-    return top.select("vec_id", F.round("cosine", EMB_ROUND).alias("cosine"))
-
-
-def q_embedding_near_dup_mb(spark, sf_dir):
-    """Multi-band near-dup (2 independent plane sets): candidates union
-    over bands, exact cosine once per distinct pair — recall is a strict
-    superset of the single-band query."""
-    emb = _t(spark, sf_dir, "embeddings")
-    nd = SIM.embedding_near_dup(emb, threshold=0.3, n_planes=8, bands=2)
-    return nd.select("id_a", "id_b", F.round("cosine", EMB_ROUND).alias("cosine"))
-
-
-def q_ann_lsh_indexed(spark, sf_dir):
-    """ANN against the write-time-bucketed table: signature computed ONCE at
-    write, query bucket computed driver-side (no Spark job), scan pruned to
-    one partition via PartitionFilters. Same oracle as ann_lsh — the index
-    must not change the answer."""
-    import shutil
-    import tempfile
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = [r[0] for r in emb.filter(F.col("vec_id") == 2).select(F.explode("embedding")).collect()]
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ann_idx_")
-    try:
-        path = f"{tmp}/ann_index"
-        SIM.write_ann_index(emb, path, n_planes=8)
-        top = SIM.ann_lsh_topk_indexed(spark, path, q, k=10, n_planes=8, exclude_id=2)
-        out = top.select("vec_id", F.round("cosine", EMB_ROUND).alias("cosine"))
-        return spark.createDataFrame(out.toPandas(), out.schema)  # outlive the temp dir
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def q_ann_lsh_probes(spark, sf_dir):
-    """Multi-probe indexed ANN (probes=3): scans the query's bucket PLUS
-    its two smallest-margin Hamming-1 neighbor buckets (the planes the
-    query sits closest to are the ones most likely to have split true
-    neighbors away). Still partition-pruned — an IN-list over the bucket
-    partition column reads 3/2^8 of the index — and recall is a strict
-    superset of the single-bucket ann_lsh_indexed scan."""
-    import shutil
-    import tempfile
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = [r[0] for r in emb.filter(F.col("vec_id") == 2).select(F.explode("embedding")).collect()]
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ann_mp_")
-    try:
-        path = f"{tmp}/ann_index"
-        SIM.write_ann_index(emb, path, n_planes=8)
-        top = SIM.ann_lsh_topk_indexed(
-            spark, path, q, k=10, n_planes=8, exclude_id=2, probes=3
-        )
-        out = top.select("vec_id", F.round("cosine", EMB_ROUND).alias("cosine"))
-        return spark.createDataFrame(out.toPandas(), out.schema)  # outlive the temp dir
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def q_ann_ivf(spark, sf_dir):
-    """IVF-flat ANN: vectors partitioned by nearest-centroid id at write
-    time (coarse quantizer = argmax cosine to C deterministic seed
-    centroids — the C smallest vec_ids — so the full index+query path has
-    a DuckDB value oracle), query probes its 2 nearest centroid lists
-    (partition-pruned), exact cosine re-rank. write_ivf_index(refine=True)
-    trains the centroids on a bounded sample for real deployments;
-    seeding stays deterministic here for oracle parity."""
-    import shutil
-    import tempfile
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = [r[0] for r in emb.filter(F.col("vec_id") == 2).select(F.explode("embedding")).collect()]
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ivf_")
-    try:
-        path = f"{tmp}/ivf_index"
-        SIM.write_ivf_index(emb, path, n_centroids=8)
-        top = SIM.ann_ivf_topk(spark, path, q, k=10, n_probes=2, exclude_id=2)
-        out = top.select("vec_id", F.round("cosine", EMB_ROUND).alias("cosine"))
-        return spark.createDataFrame(out.toPandas(), out.schema)  # outlive the temp dir
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -730,13 +593,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multi_width_rare": q_multi_width_rare,
         "pad_counts": q_pad_counts,
         "before_during_after": q_before_during_after,
-        "cosine_topk": q_cosine_topk,
-        "embedding_near_dup": q_embedding_near_dup,
-        "embedding_near_dup_mb": q_embedding_near_dup_mb,
-        "ann_lsh": q_ann_lsh,
-        "ann_lsh_indexed": q_ann_lsh_indexed,
-        "ann_lsh_probes": q_ann_lsh_probes,
-        "ann_ivf": q_ann_ivf,
         "stream_bin_counts": q_stream_bin_counts,
     }
 
@@ -923,7 +779,7 @@ FROM matrix GROUP BY source
 """
 
 
-def _ratio_sql_exprs(round_to: int | None = EMB_ROUND) -> str:
+def _ratio_sql_exprs(round_to: int | None = ROUND_DIGITS) -> str:
     from bgp_feature_extractor_spark.operators.ratios import RATIO_DEFS
 
     parts = []
@@ -979,7 +835,7 @@ def _before_during_after_sql() -> str:
          ELSE 'much ' || {sign} END AS {stat}_verdict_{ref}"""
             )
     stats_out = ",\n  ".join(
-        f"round({p}_{s}, {EMB_ROUND}) AS {p}_{s}"
+        f"round({p}_{s}, {ROUND_DIGITS}) AS {p}_{s}"
         for p in ("before", "during", "after")
         for s in ("mean", "median")
     )
@@ -1076,14 +932,14 @@ per AS (
 )
 SELECT user_id, count(*) AS n_sessions, sum(n_events)::BIGINT AS n_events,
        max(duration_s) AS max_duration_s,
-       round(avg(duration_s), {EMB_ROUND}) AS avg_duration_s
+       round(avg(duration_s), {ROUND_DIGITS}) AS avg_duration_s
 FROM per GROUP BY user_id
 """
     sqls["rolling"] = f"""
 WITH e AS ({_EV}),
 per AS (SELECT event_type, bin, count(*) AS n FROM e GROUP BY event_type, bin)
 SELECT event_type, bin, n,
-  round(avg(n) OVER w, {EMB_ROUND}) AS n_roll_mean,
+  round(avg(n) OVER w, {ROUND_DIGITS}) AS n_roll_mean,
   max(n) OVER w AS n_roll_max
 FROM per
 WINDOW w AS (PARTITION BY event_type ORDER BY bin ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)
@@ -1105,7 +961,7 @@ iv AS (
 SELECT event_type,
   CASE WHEN tsl BETWEEN start_ts AND end_ts THEN 1 ELSE 0 END AS label,
   count(*) AS n,
-  round(avg(round(value * 100)::BIGINT), {EMB_ROUND}) AS avg_value_cents
+  round(avg(round(value * 100)::BIGINT), {ROUND_DIGITS}) AS avg_value_cents
 FROM e, iv GROUP BY 1, 2
 """
     sqls["asof_classify"] = f"""
@@ -1190,7 +1046,7 @@ binz AS (
 SELECT source, bin,
        sum(rare)::BIGINT AS number_rare_ases,
        max(rare)::BIGINT AS rare_ases_max,
-       round(avg(rare), {EMB_ROUND}) AS rare_ases_avg
+       round(avg(rare), {ROUND_DIGITS}) AS rare_ases_avg
 FROM binz GROUP BY 1, 2
 """
 
@@ -1246,7 +1102,7 @@ binz AS (
 SELECT source, bin,
        sum(rare)::BIGINT AS number_rare_ases,
        max(rare)::BIGINT AS rare_ases_max,
-       round(avg(rare), {EMB_ROUND}) AS rare_ases_avg
+       round(avg(rare), {ROUND_DIGITS}) AS rare_ases_avg
 FROM binz GROUP BY 1, 2
 """
 
@@ -1258,116 +1114,4 @@ FROM binz GROUP BY 1, 2
         for mode, sql_fn in (("exact", _rare_bins_sql), ("block", _rare_block_sql))
         for w in (1, 5)
     )
-    sqls["cosine_topk"] = f"""
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-SELECT vec_id,
-  round(list_reduce(list_transform(list_zip(embedding::DOUBLE[], qv::DOUBLE[]), z -> z[1] * z[2]), (acc, x) -> acc + x)
-    / (sqrt(list_reduce(list_transform(embedding::DOUBLE[], x -> x * x), (acc, x) -> acc + x))
-       * sqrt(list_reduce(list_transform(qv::DOUBLE[], x -> x * x), (acc, x) -> acc + x))), {EMB_ROUND}) AS cosine
-FROM embeddings, q
-WHERE vec_id <> 0
-ORDER BY list_reduce(list_transform(list_zip(embedding::DOUBLE[], qv::DOUBLE[]), z -> z[1] * z[2]), (acc, x) -> acc + x)
-    / (sqrt(list_reduce(list_transform(embedding::DOUBLE[], x -> x * x), (acc, x) -> acc + x))
-       * sqrt(list_reduce(list_transform(qv::DOUBLE[], x -> x * x), (acc, x) -> acc + x))) DESC, vec_id
-LIMIT 10
-"""
-    # hyperplane-LSH bucket: SQL mirror of operators/similarity.hyperplane_signature
-    # (seeded LCG plane weights; DuckDB lambda index i is 1-based -> i-1)
-    def _plane_dot(p: int) -> str:
-        return (
-            "list_sum(list_transform(embedding::DOUBLE[], (x, i) -> x * "
-            f"(((({p}*1000003) + (i-1)) * 2654435761) % 1048576 / 1048576.0 * 2 - 1)))"
-        )
-
-    def _bucket_off(off: int) -> str:
-        return " + ".join(
-            f"CASE WHEN {_plane_dot(off + i)} > 0 THEN {1 << i} ELSE 0 END" for i in range(8)
-        )
-
-    _bucket = _bucket_off(0)
-    _cos_ab = (
-        "list_reduce(list_transform(list_zip(a._v, b._v), z -> z[1] * z[2]), (acc, x) -> acc + x)"
-        " / (sqrt(list_reduce(list_transform(a._v, x -> x * x), (acc, x) -> acc + x))"
-        " * sqrt(list_reduce(list_transform(b._v, x -> x * x), (acc, x) -> acc + x)))"
-    )
-    sqls["embedding_near_dup"] = f"""
-WITH bk AS (SELECT vec_id, embedding::DOUBLE[] AS _v, ({_bucket})::BIGINT AS bucket FROM embeddings)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, round({_cos_ab}, {EMB_ROUND}) AS cosine
-FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE {_cos_ab} >= 0.3
-"""
-    sqls["embedding_near_dup_mb"] = f"""
-WITH bk AS (SELECT vec_id, embedding::DOUBLE[] AS _v,
-            ({_bucket_off(0)})::BIGINT AS b0, ({_bucket_off(8)})::BIGINT AS b1
-            FROM embeddings),
-cand AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b FROM bk a JOIN bk b ON a.b0 = b.b0 AND a.vec_id < b.vec_id
-  UNION
-  SELECT a.vec_id, b.vec_id FROM bk a JOIN bk b ON a.b1 = b.b1 AND a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, round({_cos_ab}, {EMB_ROUND}) AS cosine
-FROM cand JOIN bk a ON a.vec_id = cand.id_a JOIN bk b ON b.vec_id = cand.id_b
-WHERE {_cos_ab} >= 0.3
-"""
-    _cos_q = (
-        "list_reduce(list_transform(list_zip(a._v, q.qv), z -> z[1] * z[2]), (acc, x) -> acc + x)"
-        " / (sqrt(list_reduce(list_transform(a._v, x -> x * x), (acc, x) -> acc + x))"
-        " * sqrt(list_reduce(list_transform(q.qv, x -> x * x), (acc, x) -> acc + x)))"
-    )
-    sqls["ann_lsh"] = f"""
-WITH bk AS (SELECT vec_id, embedding::DOUBLE[] AS _v, ({_bucket})::BIGINT AS bucket FROM embeddings),
-q AS (SELECT _v AS qv, bucket AS qb FROM bk WHERE vec_id = 2)
-SELECT a.vec_id, round({_cos_q}, {EMB_ROUND}) AS cosine
-FROM bk a, q
-WHERE a.vec_id <> 2 AND a.bucket = q.qb
-ORDER BY {_cos_q} DESC, a.vec_id
-LIMIT 10
-"""
-    # the write-time-bucketed index must return exactly the recompute answer
-    sqls["ann_lsh_indexed"] = sqls["ann_lsh"]
-    # multi-probe: query bucket + 2 smallest-margin Hamming-1 neighbors
-    _margins = ", ".join(f"abs({_plane_dot(i)})" for i in range(8))
-    sqls["ann_lsh_probes"] = f"""
-WITH bk AS (SELECT vec_id, embedding::DOUBLE[] AS _v, ({_bucket})::BIGINT AS bucket FROM embeddings),
-q AS (SELECT embedding::DOUBLE[] AS qv, ({_bucket})::BIGINT AS qb,
-      [{_margins}] AS margins
-      FROM embeddings WHERE vec_id = 2),
-mrow AS (SELECT t.i, q.margins[t.i + 1] AS m FROM q, range(8) t(i)),
-flips AS (SELECT i FROM mrow ORDER BY m, i LIMIT 2),
-probes AS (SELECT qb AS b FROM q UNION ALL SELECT xor(qb, (1::BIGINT << i)) FROM flips, q)
-SELECT a.vec_id, round({_cos_q}, {EMB_ROUND}) AS cosine
-FROM bk a, q
-WHERE a.vec_id <> 2 AND a.bucket IN (SELECT b FROM probes)
-ORDER BY {_cos_q} DESC, a.vec_id
-LIMIT 10
-"""
-    # IVF-flat: deterministic seed centroids (C smallest vec_ids), argmax
-    # cosine assignment (FIRST max on ties = lowest centroid id), 2-probe
-    def _cosd(xa: str, ya: str) -> str:
-        return (
-            f"(list_reduce(list_transform(list_zip({xa}, {ya}), z -> z[1] * z[2]), (acc, u) -> acc + u)"
-            f" / (sqrt(list_reduce(list_transform({xa}, u -> u * u), (acc, u) -> acc + u))"
-            f" * sqrt(list_reduce(list_transform({ya}, w -> w * w), (acc, w) -> acc + w))))"
-        )
-
-    sqls["ann_ivf"] = f"""
-WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT vec_id AS cid, v AS cv FROM emb ORDER BY vec_id LIMIT 8),
-sim AS (SELECT e.vec_id, c.cid, {_cosd('e.v', 'c.cv')} AS s FROM emb e CROSS JOIN cent c),
-asg AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
-    FROM sim) t
-  WHERE rn = 1
-),
-q AS (SELECT v AS qv FROM emb WHERE vec_id = 2),
-qs AS (SELECT c.cid, {_cosd('c.cv', 'q.qv')} AS s FROM cent c, q),
-probes AS (SELECT cid FROM qs ORDER BY s DESC, cid LIMIT 2)
-SELECT e.vec_id, round({_cosd('e.v', 'q.qv')}, {EMB_ROUND}) AS cosine
-FROM emb e JOIN asg ON asg.vec_id = e.vec_id, q
-WHERE e.vec_id <> 2 AND asg.cid IN (SELECT cid FROM probes)
-ORDER BY {_cosd('e.v', 'q.qv')} DESC, e.vec_id
-LIMIT 10
-"""
     return sqls

@@ -24,8 +24,6 @@ PLAN_QUERIES = [
     "rolling",
     "sessionize",
     "interval_label",
-    "cosine_topk",
-    "embedding_near_dup",
     "multi_width_labeled",
     "multi_width_rare",
 ]

@@ -15,7 +15,7 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = ["events", "documents", "embeddings"]
+TABLES = ["events", "documents"]
 
 
 @pytest.fixture(scope="module")
